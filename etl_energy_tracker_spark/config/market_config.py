@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class Market:
@@ -161,7 +163,7 @@ def i90_errores_df(
         for e in (I90_ERRORS if errors is None else errors)
         if e.fuente_error == "i90"
     ]
-    return spark.createDataFrame(rows, "fecha string, tipo_error string")
+    return local_frame(spark, rows, "fecha string, tipo_error string")
 
 
 def markets_df(spark: SparkSession) -> DataFrame:
@@ -179,7 +181,8 @@ def markets_df(spark: SparkSession) -> DataFrame:
         )
         for m in MARKETS
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "id_mercado smallint, mercado string, folder string, "
         "indicador_esios int, sheet_i90_volumenes string, "
@@ -189,10 +192,9 @@ def markets_df(spark: SparkSession) -> DataFrame:
 
 def indicator_map_df(spark: SparkSession) -> DataFrame:
     rows = [(ind, mid) for ind, mid in INDICATOR_TO_MARKET.items()]
-    return spark.createDataFrame(rows, "indicador_id int, id_mercado smallint")
+    return local_frame(spark, rows, "indicador_id int, id_mercado smallint")
 
 
 def tecnologias_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(TECNOLOGIAS)], "id int, tecnologia string"
-    )
+    rows = [(i + 1, t) for i, t in enumerate(TECNOLOGIAS)]
+    return local_frame(spark, rows, "id int, tecnologia string")

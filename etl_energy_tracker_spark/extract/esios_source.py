@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config.market_config import MARKET_BY_NAME, REGULATORY_DATES
+from ..session import local_frame
 
 API_BASE = "https://api.esios.ree.es/indicators"
 
@@ -47,12 +48,15 @@ def select_indicator(market_name: str, for_date: str) -> int:
     return m.indicador_esios
 
 
-def parse_indicator_payload(
-    spark: SparkSession, payload: dict, indicator_id: int
-) -> DataFrame:
-    """JSON payload → raw_precios_esios rows (columns per
-    FIXTURES.md §1.1): value, datetime_utc, geo_name, plus the
-    granularity tag derived from consecutive timestamps."""
+RAW_SCHEMA = (
+    "datetime_utc string, value double, indicador_id string, geo_name string, "
+    "granularidad string"
+)
+
+
+def _payload_rows(payload: dict, indicator_id: int) -> list[tuple]:
+    """JSON payload -> raw rows, with the granularity tag derived from
+    the payload's timestamps: quarter-hour grids have :15/:30 stamps."""
     values = (payload.get("indicator") or {}).get("values") or []
     rows = [
         (
@@ -63,18 +67,20 @@ def parse_indicator_payload(
         )
         for v in values
     ]
-    df = spark.createDataFrame(
-        rows, "datetime_utc string, value double, indicador_id string, geo_name string"
-    )
-    # granularity: quarter-hour grids have :15/:30/:45 stamps
-    from pyspark.sql import functions as F
-
     has_quarter = any(
         (r[0] or "").find(":15:") >= 0 or (r[0] or "").find(":30:") >= 0 for r in rows
     )
-    return df.withColumn(
-        "granularidad", F.lit("Quince minutos" if has_quarter else "Hora")
-    )
+    granularity = "Quince minutos" if has_quarter else "Hora"
+    return [(*r, granularity) for r in rows]
+
+
+def parse_indicator_payload(
+    spark: SparkSession, payload: dict, indicator_id: int
+) -> DataFrame:
+    """JSON payload → raw_precios_esios rows (columns per
+    FIXTURES.md §1.1): value, datetime_utc, geo_name, plus the
+    granularity tag derived from consecutive timestamps."""
+    return local_frame(spark, _payload_rows(payload, indicator_id), RAW_SCHEMA)
 
 
 def download_range(
@@ -86,16 +92,15 @@ def download_range(
     api_key: str = "",
 ) -> DataFrame:
     """Per-day driver loop (extract/esios_extractor.py:108-133) —
-    returns the unioned raw frame for the range; caller writes it to
-    the raw zone."""
+    returns one raw frame for the range, each day's rows tagged with
+    that day's granularity; caller writes it to the raw zone."""
     headers = {"x-api-key": api_key, "Accept": "application/json"}
     day = dt.date.fromisoformat(start)
     end_d = dt.date.fromisoformat(end)
-    out: DataFrame | None = None
+    rows: list[tuple] = []
     while day <= end_d:
         ind = select_indicator(market_name, day.isoformat())
         payload = fetcher(indicator_url(ind, day.isoformat(), day.isoformat()), headers)
-        df = parse_indicator_payload(spark, payload, ind)
-        out = df if out is None else out.unionByName(df)
+        rows += _payload_rows(payload, ind)
         day += dt.timedelta(days=1)
-    return out
+    return local_frame(spark, rows, RAW_SCHEMA)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _xlsx_col_index(ref: str) -> int:
     """Cell reference column letters → 0-based index ('A'→0, 'AA'→26)."""
@@ -157,7 +159,7 @@ def grid_to_wide_df(spark: SparkSession, grid: list[list]) -> DataFrame:
     header = [str(c).strip() for c in grid[h]]
     data = [[None if c is None else str(c) for c in row] for row in grid[h + 1 :]]
     cols = ", ".join(f"`{c}` string" for c in header)
-    return spark.createDataFrame(data, cols)
+    return local_frame(spark, data, cols)
 
 
 def melt_hour_columns(

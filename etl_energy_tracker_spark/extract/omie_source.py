@@ -8,8 +8,9 @@ filters member names by date/session, parses European decimals and
 Here the file payloads are plain text lines (injectable — no
 network); parsing is Spark-native: ``spark.read.csv`` with ``sep=';'``
 over the raw zone in production, or ``csv_lines_to_df`` for in-memory
-payloads. Session extraction from filenames uses the same regex the
-engine applies via ``input_file_name()`` when reading from disk.
+payloads (a JVM-local frame via ``session.local_frame``). Session
+extraction from filenames uses the same regex the engine applies via
+``input_file_name()`` when reading from disk.
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 # e.g. PDBC_STOTA_20240115.1 → intra session 1 (id_mercado 2..8 = session+1)
 SESSION_RE = re.compile(r"\.(\d+)$")
@@ -54,7 +57,7 @@ def csv_lines_to_df(
     ncols = len(header)
     data = [row[:ncols] + [None] * (ncols - len(row)) for row in data]
     schema = ", ".join(f"`{c}` string" for c in header)
-    df = spark.createDataFrame(data, schema)
+    df = local_frame(spark, data, schema)
     session = session_from_filename(filename)
     id_mercado = 1 if session is None else session + 1
     if "Fecha" in df.columns:

@@ -15,20 +15,22 @@ offline-testable, and the caller owns auth (certificates, cookies).
 
 Parsed frames feed ``operators/tracking.detect_changes`` /
 ``up_change_log`` and ``operators/zr.zr_change_log`` directly. Dim
-files are a few thousand rows; parsing happens in Spark (CSV lines
-distributed via parallelize) so the shapes stay DataFrames end-to-end,
-but there is deliberately no scale machinery here — these are
-broadcast-sized dimension refreshes, daily cadence.
+files are a few thousand rows, so they parse on the driver and become
+JVM-local frames (``session.local_frame``); shaping after that stays
+in DataFrames, but there is deliberately no scale machinery here —
+these are broadcast-sized dimension refreshes, daily cadence.
 """
 
 from __future__ import annotations
 
+import csv
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipelines.common import parse_european_number
+from ..session import local_frame
 
 UP_LIST_URL = "https://www.esios.ree.es/es/unidades-de-programacion"
 UOF_LIST_URL = "https://www.omie.es/es/listado-de-agentes"
@@ -55,14 +57,15 @@ def parse_up_list_csv(
     'Generación' UPs, European-decimal potencia, obsoleta=0, stamped.
     Raises ValueError naming missing columns, like the reference."""
     lines = [ln for ln in text.splitlines() if ln.strip()]
-    df = spark.read.option("header", True).option("sep", sep).csv(
-        spark.sparkContext.parallelize(lines)
-    )
-    missing = [c for c in UP_CSV_COLUMNS if c not in df.columns]
+    header, *records = list(csv.reader(lines, delimiter=sep)) or [[]]
+    missing = [c for c in UP_CSV_COLUMNS if c not in header]
     if missing:
         raise ValueError(f"Missing required columns in CSV: {', '.join(missing)}")
-    df = df.select(
-        *[F.col(f"`{src}`").alias(dst) for src, dst in UP_CSV_COLUMNS.items()]
+    idx = [header.index(c) for c in UP_CSV_COLUMNS]
+    # empty (or absent trailing) fields read as null, like Spark's CSV reader
+    rows = [[r[i] if i < len(r) and r[i] else None for i in idx] for r in records]
+    df = local_frame(
+        spark, rows, ", ".join(f"{dst} string" for dst in UP_CSV_COLUMNS.values())
     )
     return (
         df.where(F.col("tipo_up") == "Generación")
@@ -123,7 +126,7 @@ def parse_uof_grid(
         f"`{_UOF_RENAMES.get(header[i].upper(), header[i].lower())}` string"
         for i in keep
     )
-    return spark.createDataFrame([[r[i] for i in keep] for r in rows], cols)
+    return local_frame(spark, [[r[i] for i in keep] for r in rows], cols)
 
 
 def download_uof_list(spark: SparkSession, fetcher: GridFetcher) -> DataFrame:
@@ -161,7 +164,7 @@ def parse_bsp_list(
     ]
     cols = ", ".join(f"`{c}` string" for c in header)
     return bsp_mapping(
-        spark.createDataFrame(rows, cols), esios_col=zone_col, i90_col=code_col
+        local_frame(spark, rows, cols), esios_col=zone_col, i90_col=code_col
     )
 
 

@@ -194,9 +194,11 @@ class Lake:
         )
 
     def _dyn_overwrite(self, df: DataFrame, path: str, partition_cols: list[str]) -> None:
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # a writer option, not a session conf: the caller's session is
+        # left as it was
         (
             df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
             .option("compression", "zstd")
             .parquet(path)

@@ -901,10 +901,11 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TYPES (a schema-bounded dimension, single digits here), so the
     # matrix is states² rows no matter the corpus size. Fail loudly if
     # a schema change ever makes this collect corpus-shaped.
-    assert len(p_rows) <= 65536, (
-        f"markov transition matrix unexpectedly large ({len(p_rows)} rows);"
-        " driver-side solve assumes a bounded state space"
-    )
+    if len(p_rows) > 65536:
+        raise RuntimeError(
+            f"markov transition matrix unexpectedly large ({len(p_rows)} rows);"
+            " driver-side solve assumes a bounded state space"
+        )
     chans = sorted({s for s, _, _ in p_rows if s != "__start__"})
     from collections import defaultdict
 

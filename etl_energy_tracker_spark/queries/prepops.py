@@ -1349,6 +1349,36 @@ def _doremi_oracle() -> str:
     )
 
 
+def _doremi_fixed_point(stats: list[tuple[str, int, int]]) -> list[tuple]:
+    """The ``_DRM_ITERS`` multiplicative updates over per-domain
+    (source, n_docs, toks): rows of (source, n_docs, toks, loss_u,
+    ref_ppm, a) in truncating-integer micro/ppm units. A corpus with no
+    tokens has no reference share: ref_ppm is NULL, as integer division
+    by zero gives in the oracle, and the first update lifts every NULL
+    weight to the floor of 1 (GREATEST ignores NULL; a zero weight
+    updates the same way), so the weights come out uniform."""
+    t = sum(tk for _, _, tk in stats)
+    cur = []
+    for s, nd, tk in stats:
+        ref = tk * 1000000 // t if t else None
+        cur.append((s, nd, tk, tk * 1000000 // nd, ref, ref or 0))
+    for _ in range(_DRM_ITERS):
+        avg_u = sum(a * loss_u for _, _, _, loss_u, _, a in cur) // 1000000
+        raw = [
+            (
+                s, nd, tk, loss_u, ref,
+                max((a * ((loss_u * 1000000) // max(avg_u, 1))) // 1000000, 1),
+            )
+            for s, nd, tk, loss_u, ref, a in cur
+        ]
+        tot_a = sum(a_raw for _, _, _, _, _, a_raw in raw)
+        cur = [
+            (s, nd, tk, loss_u, ref, a_raw * 1000000 // tot_a)
+            for s, nd, tk, loss_u, ref, a_raw in raw
+        ]
+    return cur
+
+
 @register(
     "doremi_domain_weights",
     oracle=_doremi_oracle(),
@@ -1393,31 +1423,14 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are bit-identical: sums are order-independent integers and
     # Python // matches Spark DIV on these non-negative operands.
     rows = base.collect()
-    assert len(rows) <= 65536, (
-        f"doremi domain table unexpectedly large ({len(rows)} rows);"
-        " driver-side fixed point assumes a bounded domain space"
+    if len(rows) > 65536:
+        raise RuntimeError(
+            f"doremi domain table unexpectedly large ({len(rows)} rows);"
+            " driver-side fixed point assumes a bounded domain space"
+        )
+    cur = _doremi_fixed_point(
+        [(r["source"], int(r["n_docs"]), int(r["toks"])) for r in rows]
     )
-    stats = [(r["source"], int(r["n_docs"]), int(r["toks"])) for r in rows]
-    t = sum(tk for _, _, tk in stats)
-    cur = [
-        # (source, n_docs, toks, loss_u, ref_ppm, a)
-        (s, nd, tk, tk * 1000000 // nd, tk * 1000000 // t, tk * 1000000 // t)
-        for s, nd, tk in stats
-    ]
-    for _ in range(_DRM_ITERS):
-        avg_u = sum(a * loss_u for _, _, _, loss_u, _, a in cur) // 1000000
-        raw = [
-            (
-                s, nd, tk, loss_u, ref,
-                max((a * ((loss_u * 1000000) // max(avg_u, 1))) // 1000000, 1),
-            )
-            for s, nd, tk, loss_u, ref, a in cur
-        ]
-        tot_a = sum(a_raw for _, _, _, _, _, a_raw in raw)
-        cur = [
-            (s, nd, tk, loss_u, ref, a_raw * 1000000 // tot_a)
-            for s, nd, tk, loss_u, ref, a_raw in raw
-        ]
     return spark.createDataFrame(
         cur,
         "source string, n_docs long, toks long, loss_micro long,"

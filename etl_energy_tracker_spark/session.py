@@ -13,8 +13,12 @@ contract the engine relies on.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -63,3 +67,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
+    """A small driver-side frame (payload rows, config dimensions) as a
+    JVM-local relation.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a
+    ``PythonRDD``, so every job that scans or broadcasts the frame starts
+    Python-worker tasks. Here the rows become a ``pyarrow.Table`` typed
+    from the DDL schema and Spark slices its record batches into a
+    ``ParallelCollectionRDD``: scans stay in the JVM. Independent of
+    ``spark.sql.execution.arrow.*``, so it works on any plain session.
+    Every row must have one value per field.
+    """
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = zip(*rows, strict=True) if rows else [()] * len(arrow_schema)
+    arrays = [
+        pa.array(col, type=field.type)
+        for col, field in zip(columns, arrow_schema, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

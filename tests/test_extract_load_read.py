@@ -438,3 +438,81 @@ def test_xlsx_grid_stdlib_reader(spark):
         zf.writestr("xl/worksheets/sheet1.xml", sheet1)
         zf.writestr("xl/worksheets/sheet2.xml", sheet2)
     assert read_xlsx_grid(buf2.getvalue(), "I90DIA01") == grid
+
+
+def _python_free(df) -> bool:
+    return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("a", 1, None), (None, -2, 1.5)], "s string, n smallint, x double"),
+        ([], "s string, n int"),
+        ([("15/01/2024", "1,5")], "`Fecha` string, `Energía Compra/Venta` string"),
+        ([(True, None), (None, 7)], "flag boolean, id long"),
+    ],
+)
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    from etl_energy_tracker_spark.session import local_frame
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")  # a plain session, as the driver harness builds
+    try:
+        got = local_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert _python_free(got) and not _python_free(want)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_local_frame_rejects_ragged_rows(spark):
+    from etl_energy_tracker_spark.session import local_frame
+
+    with pytest.raises(ValueError):
+        local_frame(spark, [("a", 1), ("b",)], "s string, n int")
+    with pytest.raises(ValueError):
+        local_frame(spark, [("a", 1, 2)], "s string, n int")
+
+
+def test_etl_frame_builders_start_no_python_worker(spark):
+    from etl_energy_tracker_spark.config import market_config as mc
+    from etl_energy_tracker_spark.extract import tracking_sources as ts
+
+    payload = {"indicator": {"values": [
+        {"datetime_utc": "2024-01-15T10:00:00Z", "value": 42.5},
+        {"datetime_utc": "2024-01-15T10:15:00Z", "value": None},
+    ]}}
+    grid = [["Unidad de Programación", "Total", "1"], ["ABO3", "10", "10"]]
+    up_csv = (
+        "Código de UP;Potencia máxima MW;Tipo de producción;"
+        "Zona de Regulación;Tipo de UP\nUPGEN1;1,5;Solar;;Generación"
+    )
+    uof_grid = [[None], [None], [None], ["CODIGO", "ZONA/FRONTERA"], ["UOF1", "ES"]]
+    bsp_grid = [["Descripción corta BSP-aFRR", "Código BSP-aFRR"], ["ZONA_A", "Z001"]]
+    frames = {
+        "esios payload": esios_source.parse_indicator_payload(spark, payload, 600),
+        "esios range": esios_source.download_range(
+            spark, lambda url, headers: payload, "Diario", "2024-01-15", "2024-01-16"
+        ),
+        "omie lines": omie_source.csv_lines_to_df(
+            spark, ["Fecha;Unidad", "15/01/2024;UOF1"], "PDBC_STOTA_20240115.1"
+        ),
+        "i90 grid": i90_source.grid_to_wide_df(spark, grid),
+        "up list": ts.parse_up_list_csv(spark, up_csv, "2026-08-13"),
+        "uof list": ts.parse_uof_grid(spark, uof_grid),
+        "bsp list": ts.parse_bsp_list(spark, bsp_grid),
+        "i90 errores": mc.i90_errores_df(spark, (mc.I90Error("2024-01-15", "03"),)),
+        "markets": mc.markets_df(spark),
+        "indicator map": mc.indicator_map_df(spark),
+        "tecnologias": mc.tecnologias_df(spark),
+    }
+    assert [name for name, df in frames.items() if not _python_free(df)] == []
+    # one frame for the whole range, each day's rows tagged
+    assert frames["esios range"].count() == 4
+    # an empty CSV field reads as null, as Spark's CSV reader has it
+    up = frames["up list"].first()
+    assert up["zona_regulacion"] is None and up["potencia"] == 1.5

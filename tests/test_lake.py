@@ -95,6 +95,32 @@ def test_raw_append_dedup(spark, lake):
     assert lake.read_raw("diario", "volumenes_i90").count() == 1
 
 
+def test_writes_leave_session_overwrite_mode(spark, lake):
+    """Dynamic partition overwrite is a writer option: a session set to
+    ``static`` stays ``static``, and partitions the batch did not touch
+    survive both sinks."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        for day, month in (("2024-01-15", 1), ("2024-02-02", 2)):
+            raw = spark.createDataFrame(
+                [(day, 1.0, 2024, month)], "fecha string, v double, year int, month int"
+            )
+            lake.write_raw(raw, "diario", "v")
+        assert spark.conf.get(key) == "static"
+        months = [r["month"] for r in lake.read_raw("diario", "v").collect()]
+        assert sorted(months) == [1, 2]
+
+        lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+        lake.upsert_processed(_precios(spark, [(T2, 1, 70.0)]), "precios")
+        assert spark.conf.get(key) == "static"
+        got = lake.read_processed("precios").collect()
+        assert {(r["datetime_utc"], r["precio"]) for r in got} == {(T0, 50.0), (T2, 70.0)}
+    finally:
+        spark.conf.set(key, before)
+
+
 def _leaf_file_counts(root):
     import os
 

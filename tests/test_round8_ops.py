@@ -24,6 +24,7 @@ from etl_energy_tracker_spark.queries.dedupops import (
 )
 from etl_energy_tracker_spark.queries.prepops import (
     _DRM_ITERS,
+    _doremi_fixed_point,
     doremi_domain_weights,
 )
 from etl_energy_tracker_spark.queries.relational import (
@@ -170,6 +171,19 @@ def test_doremi_python_replay(spark):
     lo = min(sources, key=lambda s: loss[s])
     assert a[hi] >= ref[hi]
     assert a[lo] <= ref[lo]
+
+
+def test_doremi_zero_token_corpus():
+    """No tokens means a zero total: the reference share is NULL (the
+    oracle's integer division by zero) and the weights come out uniform,
+    instead of a ZeroDivisionError."""
+    out = _doremi_fixed_point([("a", 2, 0), ("b", 1, 0), ("c", 5, 0)])
+    assert [(s, loss, ref, a) for s, _, _, loss, ref, a in out] == [
+        ("a", 0, None, 333333),
+        ("b", 0, None, 333333),
+        ("c", 0, None, 333333),
+    ]
+    assert _doremi_fixed_point([]) == []
 
 
 # ------------------------------------------------- LSH parameter plan
