@@ -312,6 +312,22 @@ EXTRA = [
 ]
 
 
+def select_headline_pass(
+    controls1: tuple[float, float], controls2: tuple[float, float], baseline: float
+) -> tuple[int, str]:
+    """Which of two headline passes to report, and why: the one whose
+    worse bracket control (start or end) is closer to the control
+    baseline, i.e. the cleaner host window. The lower total is not the
+    rule, since on a contaminated host it favors whichever pass drew
+    the luckier noise. A tie keeps pass 1."""
+    worse = (max(controls1), max(controls2))
+    pick = 2 if abs(worse[1] - baseline) < abs(worse[0] - baseline) else 1
+    return pick, (
+        f"worse bracket control {worse[pick - 1]:.3f} s vs "
+        f"{worse[2 - pick]:.3f} s is closer to the {baseline} s baseline"
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -366,9 +382,10 @@ def main() -> None:
     # opened with control_start = 1.872 s (8x the 0.23 s baseline) and
     # every headline figure was unusable noise. If either bracket
     # control reads degraded (>1.5x baseline), cool down once and
-    # re-run the whole headline block; report the pass with the lower
-    # total and stamp BOTH passes' controls so the contamination (and
-    # the recourse taken) is on the record. Bounded: at most one rerun.
+    # re-run the whole headline block; report the pass with the cleaner
+    # brackets (select_headline_pass) and stamp BOTH passes' controls so
+    # the contamination (and the recourse taken) is on the record.
+    # Bounded: at most one rerun.
     CTL_BASELINE = 0.23
     ctl_start, timings, ctl_end = run_headline_pass()
     rerun_info = None
@@ -379,11 +396,13 @@ def main() -> None:
                  "total": round(sum(timings.values()), 3)}
         pass2 = {"control_start": ctl_start2, "control_end": ctl_end2,
                  "total": round(sum(timings2.values()), 3)}
-        if sum(timings2.values()) < sum(timings.values()):
+        reported, reason = select_headline_pass(
+            (ctl_start, ctl_end), (ctl_start2, ctl_end2), CTL_BASELINE
+        )
+        if reported == 2:
             ctl_start, timings, ctl_end = ctl_start2, timings2, ctl_end2
-            rerun_info = {"reported": 2, "pass1": pass1, "pass2": pass2}
-        else:
-            rerun_info = {"reported": 1, "pass1": pass1, "pass2": pass2}
+        rerun_info = {"reported": reported, "reason": reason,
+                      "pass1": pass1, "pass2": pass2}
 
     total = sum(timings.values())
 
@@ -425,7 +444,7 @@ def main() -> None:
         # window; the full rerun record stays in bench_extra.json.
         compact["protocol"] = dict(compact["protocol"])
         compact["protocol"]["load_rerun"] = {
-            "reported": rerun_info["reported"]}
+            k: rerun_info[k] for k in ("reported", "reason")}
         line = json.dumps(compact)
     assert len(line) < 1900, f"bench JSON line too long: {len(line)}"
     print(line)

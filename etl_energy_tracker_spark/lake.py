@@ -21,6 +21,12 @@ Spark-first realization:
   present in the incoming batch are rewritten — at 100 TB a daily
   upsert touches a handful of (mercado, id, year, month) leaves, never
   the table.
+- an upsert evaluates its input once: the validated, partition-tagged
+  batch is checkpointed, its distinct partition tuples are collected
+  from the checkpoint, and the existing rows are read from exactly
+  those leaf directories, by path under `basePath`, with the declared
+  on-disk schema (`stored_schema`). No schema inference, no listing of
+  the whole dataset, no semi-join; readers use the same schema.
 - files are written `sortWithinPartitions(datetime_utc)` so parquet
   row-group min/max statistics prune time-range scans (the reference
   tunes the same thing via pyarrow writer options,
@@ -33,9 +39,50 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config.market_config import MARKETS
 from .schemas import DEDUP_KEYS, PROCESSED_SCHEMAS, validate
+
+_PARTITION_COLS = ["mercado", "id_mercado", "year", "month"]
+
+
+def stored_schema(dataset: str) -> T.StructType:
+    """A processed dataset's schema as it reads back from disk: the
+    declared data columns, ``_ingest_seq``, then the partition columns
+    as partition discovery types them (``id_mercado`` leaves the data
+    files and comes back as an int). Reading with it skips inference."""
+    data = [f for f in PROCESSED_SCHEMAS[dataset].fields if f.name not in _PARTITION_COLS]
+    return T.StructType(
+        data
+        + [T.StructField("_ingest_seq", T.LongType()), T.StructField("mercado", T.StringType())]
+        + [T.StructField(c, T.IntegerType()) for c in _PARTITION_COLS[1:]]
+    )
+
+
+def _leaf_dir(path: str, values) -> str:
+    # partition values are market folders and ints, which Spark writes
+    # unescaped; NULL goes to Hive's default partition
+    return os.path.join(
+        path,
+        *[
+            f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+            for c, v in zip(_PARTITION_COLS, values)
+        ],
+    )
+
+
+def _leaves(root: str):
+    """(dir, parquet file names) for every directory under ``root``
+    holding parquet files. ``_``/``.``-prefixed directories (staging,
+    metadata) are not entered. O(#files) metadata listing, never a data
+    scan; at 100 TB this listing comes from the table format's
+    manifest instead."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        files = [f for f in filenames if f.endswith(".parquet")]
+        if files:
+            yield dirpath, files
 
 
 class Lake:
@@ -111,20 +158,24 @@ class Lake:
 
         path = self.processed_path(dataset)
         seq = 0
-        merging_with_existing = self._exists(path)
-        merged = df.withColumn("_ingest_seq", F.lit(0).cast("long"))
-        if merging_with_existing:
-            existing = self.spark.read.parquet(path)
-            # prune to the partitions the incoming batch touches
-            parts = df.select("mercado", "id_mercado", "year", "month").distinct()
-            existing = existing.join(
-                F.broadcast(parts), ["mercado", "id_mercado", "year", "month"], "left_semi"
-            )
-            seq_row = existing.agg(F.max("_ingest_seq")).first()[0]
-            seq = (seq_row if seq_row is not None else -1) + 1
-            merged = existing.unionByName(
-                df.withColumn("_ingest_seq", F.lit(seq).cast("long"))
-            )
+        existing = None
+        if self._exists(path):
+            # the one evaluation of the incoming transform: the
+            # partition probe and the merge both read this checkpoint
+            df = df.localCheckpoint(eager=True)
+            touched = df.select(*_PARTITION_COLS).distinct().collect()
+            leaves = [d for d in (_leaf_dir(path, r) for r in touched) if os.path.isdir(d)]
+            if leaves:
+                existing = (
+                    self.spark.read.schema(stored_schema(dataset))
+                    .option("basePath", path)
+                    .parquet(*leaves)
+                )
+                top = existing.agg(F.max("_ingest_seq")).first()[0]
+                seq = (top if top is not None else -1) + 1
+        merged = df.withColumn("_ingest_seq", F.lit(seq).cast("long"))
+        if existing is not None:
+            merged = existing.unionByName(merged)
 
         keys = DEDUP_KEYS.get(dataset)
         if keys:
@@ -134,15 +185,13 @@ class Lake:
                 .where(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        if merging_with_existing:
-            # the plan both reads and dynamically overwrites `path`;
-            # materialize the merged batch first so the commit can never
-            # race its own scan. Bounded: only the touched partitions.
+        if existing is not None:
+            # the plan both reads and dynamically overwrites the touched
+            # leaves; materialize the merged batch first so the commit
+            # can never race its own scan. Bounded: only those leaves.
             merged = merged.localCheckpoint(eager=True)
         self._dyn_overwrite(
-            merged.sortWithinPartitions("datetime_utc"),
-            path,
-            ["mercado", "id_mercado", "year", "month"],
+            merged.sortWithinPartitions("datetime_utc"), path, _PARTITION_COLS
         )
 
     def read_processed(
@@ -159,7 +208,9 @@ class Lake:
         (year/month/mercado/id_mercado) *and* the data column, so
         Catalyst prunes directories first and parquet row-group stats
         prune within files."""
-        df = self.spark.read.parquet(self.processed_path(dataset))
+        df = self.spark.read.schema(stored_schema(dataset)).parquet(
+            self.processed_path(dataset)
+        )
         if start:
             s = F.lit(start).cast("timestamp")
             df = df.where(
@@ -207,25 +258,22 @@ class Lake:
 
 def latest_raw_period(lake: Lake, mercado: str, dataset: str) -> tuple[int, int] | None:
     """S6 raw folder discovery (raw_file_utils.py:316-419): the most
-    recent (year, month) present in the raw zone — from partition
-    values, no data scan."""
-    import pyspark.sql.functions as F
-
-    path = lake.raw_path(mercado, dataset)
-    if not lake._exists(path):
-        return None
-    row = (
-        lake.spark.read.parquet(path)
-        .select("year", "month")
-        .groupBy("year", "month")
-        .count()
-        .orderBy(F.desc("year"), F.desc("month"))
-        .first()
-    )
-    return (row["year"], row["month"]) if row else None
+    recent (year, month) present in the raw zone — from the
+    ``year=``/``month=`` directory names of leaves holding data, no
+    data scan."""
+    root = lake.raw_path(mercado, dataset)
+    periods = []
+    for leaf, _files in _leaves(root):
+        parts = dict(
+            p.split("=", 1) for p in os.path.relpath(leaf, root).split(os.sep) if "=" in p
+        )
+        try:
+            periods.append((int(parts["year"]), int(parts["month"])))
+        except (KeyError, ValueError):
+            continue
+    return max(periods, default=None)
 
 
-_PARTITION_COLS = ["mercado", "id_mercado", "year", "month"]
 # on-disk zstd parquet re-expands roughly this much as in-flight rows;
 # used only to size the rewrite's shuffle partitions, so a rough factor
 # is fine (AQE coalesces the remainder).
@@ -236,13 +284,10 @@ def _fragmented_leaves(
     path: str, min_files_per_leaf: int
 ) -> tuple[list[str], int]:
     """Driver-side leaf discovery: (over-fragmented leaf dirs, their
-    total on-disk bytes). O(#files) metadata listing, never a data
-    scan. At 100 TB this listing comes from the table format's manifest
-    instead — the selection logic is identical."""
+    total on-disk bytes)."""
     todo: list[str] = []
     total = 0
-    for dirpath, _dirnames, filenames in os.walk(path):
-        files = [f for f in filenames if f.endswith(".parquet")]
+    for dirpath, files in _leaves(path):
         if len(files) >= min_files_per_leaf:
             todo.append(dirpath)
             total += sum(
@@ -278,7 +323,7 @@ def compaction_plan(
     n_parts = max(
         len(todo), -(-total_bytes * _DECOMPRESS_FACTOR // target_file_bytes)
     )
-    df = lake.spark.read.option("basePath", path).parquet(*todo)
+    df = lake.spark.read.schema(stored_schema(dataset)).option("basePath", path).parquet(*todo)
     compacted = df.repartitionByRange(
         int(n_parts), *[F.col(c) for c in _PARTITION_COLS], F.col("datetime_utc")
     ).sortWithinPartitions(*_PARTITION_COLS, "datetime_utc")

@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import MOD
 
@@ -343,6 +344,17 @@ def near_dup_pairs(
     )
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """Whether Spark can order values of ``dt`` (min/max, sort keys)."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    return True
+
+
 def with_ivf_cell(
     df: DataFrame,
     centroids: DataFrame,
@@ -368,7 +380,17 @@ def with_ivf_cell(
     the window exactly: similarity rounded to 6 dp, lowest centroid_id
     wins ties, and an all-NULL-similarity row (zero-norm vector) gets
     the lowest centroid_id (NULL keys are mapped below any real cosine,
-    mirroring the DESC NULLS LAST ranking)."""
+    mirroring the DESC NULLS LAST ranking). Every payload column must
+    therefore be orderable: a map- or variant-typed one raises
+    ``TypeError`` here rather than deep in analysis."""
+    if n_probe == 1:
+        for f in df.schema.fields:
+            if f.name != id_col and not _orderable(f.dataType):
+                raise TypeError(
+                    f"with_ivf_cell(n_probe=1): payload column {f.name!r} has "
+                    f"unorderable type {f.dataType.simpleString()}; drop it or "
+                    "join it back on the id after assignment"
+                )
     cents = centroids.withColumn(
         "_cn", F.sqrt(dot(F.col("cv"), F.col("cv"), dim))
     )

@@ -260,3 +260,22 @@ def test_incremental_minhash_no_history_history_pairs(spark):
     ).collect()
     assert any(r["batch_id"] == 9999 and r["hist_id"] == 3 and r["jaccard"] == 1.0
                for r in inc2)
+
+
+def test_ivf_cell_rejects_unorderable_payload(spark):
+    """n_probe=1 carries payload columns inside its min-struct key, so a
+    map-typed payload must fail up front with the column's name; the
+    multi-probe window path does not order payloads and accepts it."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], {"a": 1}), (2, [0.0, 1.0], {"b": 2})],
+        "vid long, v array<double>, tags map<string,int>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id int, cv array<double>"
+    )
+    with pytest.raises(TypeError, match="'tags'.*map<string,int>"):
+        similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=1, dim=2)
+    cells = similarity.with_ivf_cell(df.drop("tags"), cents, "v", "vid", n_probe=1, dim=2)
+    assert {(r.vid, r.cell) for r in cells.collect()} == {(1, 0), (2, 1)}
+    probed = similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=2, dim=2)
+    assert probed.count() == 4

@@ -9,7 +9,8 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etl_energy_tracker_spark.lake import Lake
+from etl_energy_tracker_spark.lake import Lake, stored_schema
+from etl_energy_tracker_spark.schemas import PROCESSED_SCHEMAS
 
 
 def _precios(spark, rows):
@@ -83,6 +84,96 @@ def test_reader_prunes(spark, lake):
     # partition filters must reach the scan (pruning, not post-filter)
     plan = jan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def _declared_row(dataset, ts):
+    """One row of ``dataset``'s declared processed schema."""
+    from pyspark.sql import types as T
+
+    fill = {T.TimestampNTZType: ts, T.ShortType: 1, T.FloatType: 1.5, T.StringType: "x"}
+    return [fill[type(f.dataType)] for f in PROCESSED_SCHEMAS[dataset].fields]
+
+
+@pytest.mark.parametrize("dataset", sorted(PROCESSED_SCHEMAS))
+def test_stored_schema_matches_inferred(spark, lake, dataset):
+    """The declared read-back schema equals what Spark infers from the
+    directory, after a first write and after a merging upsert."""
+    schema = PROCESSED_SCHEMAS[dataset]
+    for ts in (T0, T1):  # the second upsert merges into the same leaf
+        lake.upsert_processed(spark.createDataFrame([_declared_row(dataset, ts)], schema), dataset)
+        inferred = spark.read.parquet(lake.processed_path(dataset)).schema
+        assert stored_schema(dataset) == inferred
+
+
+def test_merging_upsert_evaluates_input_once(spark, lake):
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def counted(_x):
+        calls.add(1)
+        return 1
+
+    # the counted column feeds the partition tuple, so the partition
+    # probe cannot prune it away
+    batch = spark.range(3).select(
+        (F.lit(T1) + F.make_interval(mins=F.col("id").cast("int"))).alias("datetime_utc"),
+        counted("id").alias("id_mercado"),
+        F.col("id").cast("double").alias("precio"),
+    )
+    lake.upsert_processed(batch, "precios")  # merges into January
+    assert calls.value == 3
+    assert lake.read_processed("precios").count() == 4
+
+
+def _leaf_bytes(root, leaf):
+    import os
+
+    d = os.path.join(root, leaf)
+    return {f: open(os.path.join(d, f), "rb").read() for f in sorted(os.listdir(d))}
+
+
+def test_upsert_existing_and_new_leaf(spark, lake):
+    """One batch touching an existing leaf (January) and a new one
+    (March): keep-last in January, one batch-global _ingest_seq for
+    both leaves, and February's files left byte for byte."""
+    T3 = dt.datetime(2024, 3, 5, 8)
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0), (T1, 1, 60.0), (T2, 1, 70.0)]), "precios")
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")  # January seq 1
+    root = lake.processed_path("precios")
+    feb = "mercado=diario/id_mercado=1/year=2024/month=2"
+    feb_before = _leaf_bytes(root, feb)
+
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0), (T3, 1, 80.0)]), "precios")
+    got = {
+        (r["datetime_utc"], r["precio"], r["_ingest_seq"])
+        for r in lake.read_processed(
+            "precios", columns=["datetime_utc", "precio", "_ingest_seq"]
+        ).collect()
+    }
+    assert got == {(T0, 50.0, 2), (T1, 60.0, 0), (T2, 70.0, 0), (T3, 80.0, 2)}
+    assert _leaf_bytes(root, feb) == feb_before
+
+
+def test_upsert_merges_null_partition_leaf(spark, lake):
+    """A market id outside the market dim has no folder, so its rows
+    land in Hive's default partition; a later batch still merges with
+    them instead of overwriting the leaf."""
+    lake.upsert_processed(_precios(spark, [(T0, 99, 50.0)]), "precios")
+    lake.upsert_processed(_precios(spark, [(T1, 99, 60.0)]), "precios")
+    got = lake.read_processed("precios").collect()
+    assert {(r["mercado"], r["precio"]) for r in got} == {(None, 50.0), (None, 60.0)}
+
+
+def test_read_unwritten_dataset_raises(spark, lake):
+    from pyspark.errors import AnalysisException
+
+    from etl_energy_tracker_spark.read import register_lake_tables
+
+    with pytest.raises(AnalysisException):
+        lake.read_processed("volumenes_i90")
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+    assert register_lake_tables(spark, lake) == ["precios"]
 
 
 def test_raw_append_dedup(spark, lake):

@@ -149,6 +149,18 @@ def test_latest_raw_period(spark, tmp_path):
     )
     lake.write_raw(df, "diario", "volumenes_i90")
     assert latest_raw_period(lake, "diario", "volumenes_i90") == (2024, 3)
+    # later periods that hold no live data are ignored: an empty leaf
+    # and a leaf under an `_`-prefixed staging directory
+    import glob
+    import os
+    import shutil
+
+    root = lake.raw_path("diario", "volumenes_i90")
+    os.makedirs(os.path.join(root, "year=2024", "month=12"))
+    staged = os.path.join(root, "_staging", "year=2025", "month=6")
+    os.makedirs(staged)
+    shutil.copy(glob.glob(os.path.join(root, "year=2024", "month=3", "*.parquet"))[0], staged)
+    assert latest_raw_period(lake, "diario", "volumenes_i90") == (2024, 3)
 
 
 @pytest.mark.slow
