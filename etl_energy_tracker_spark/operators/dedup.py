@@ -332,7 +332,7 @@ def with_simhash(
     wall out by 128x, matching the 64-bit production SimHash shape.
 
     One Arrow-batched pass, fully vectorized: tokens are factorized to
-    a per-batch vocabulary (C hash table), the vocabulary is viewed as
+    a per-batch vocabulary (Arrow hash table), the vocabulary is viewed as
     a zero-padded UCS4 codepoint matrix, and the portable polynomial
     fold runs as max_token_len numpy multiply-add-mod sweeps over the
     whole vocabulary at once — no per-token Python loop anywhere. Bit
@@ -392,7 +392,10 @@ def with_simhash(
         )
         n_toks = tok_lists.str.len().to_numpy(dtype="int64")
         offsets = np.concatenate(([0], np.cumsum(n_toks)[:-1]))
-        flat = tok_lists.explode()
+        # Arrow-backed factorize compares whole strings; the default
+        # object path hashes NUL-terminated C strings and gives 'ab'
+        # and 'ab\x00' one code
+        flat = tok_lists.explode().astype("string[pyarrow]")
         codes, uniq = pd.factorize(flat, sort=False)
         vocab_arr = np.asarray(uniq, dtype=object)
         hs1 = _hash_vocab(vocab_arr, seed=7)[codes]

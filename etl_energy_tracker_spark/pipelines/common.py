@@ -59,40 +59,17 @@ def standardize_datetime(
 ) -> DataFrame:
     """Mixed-granularity (fecha, hora) → canonical 15-min UTC grid.
 
-    Rows tagged hourly ('Hora') parse as DST-suffixed hour labels and
-    expand ×4 (volumes ÷4, prices replicate — etl_date_utils.py:826-863);
-    rows tagged 15-min parse as 1-based quarter indices.
-
-    Single-pass: one broadcast dim join, one conditional explode, one
-    expression tree — no filter-into-branches-and-union (that scans the
-    source twice), no row-wise Python (the reference's fast/slow-path
-    trick at etl_date_utils.py:96-134 is unnecessary)."""
+    Rows tagged hourly ('Hora') carry DST-suffixed hour labels, other
+    rows 1-based quarter indices; both become a quarter index for the
+    one conversion, then hourly rows expand ×4 (volumes ÷4, prices
+    replicate — etl_date_utils.py:826-863)."""
     is_hourly = F.col(granularity) == "Hora"
-    base_h, suffix = tg.parse_hour_label(F.col(hora))
-
-    d = dim.select(F.col("fecha").alias("_dim_fecha"), "day_type", "day_start_offset")
-    joined = df.withColumn("_fecha_d", F.to_date(fecha)).join(
-        F.broadcast(d), F.col("_fecha_d") == F.col("_dim_fecha"), "left"
+    idx = F.when(is_hourly, tg.hourly_quarter_idx(F.col(hora))).otherwise(
+        tg.parse_quarter_label(F.col(hora))
     )
-
-    offs = F.when(
-        is_hourly, F.array(F.lit(0), F.lit(15), F.lit(30), F.lit(45))
-    ).otherwise(F.array(F.lit(0)))
-    elapsed_min = F.when(
-        is_hourly,
-        tg.elapsed_hours(F.col("day_type"), base_h, suffix) * 60 + F.col("_off"),
-    ).otherwise((tg.parse_quarter_label(F.col(hora)) - 1) * 15)
-    utc = F.to_timestamp(F.col("_fecha_d")) + F.make_interval(
-        mins=elapsed_min - F.col("day_start_offset") * 60
-    )
-
-    out = joined.withColumn("_off", F.explode(offs)).withColumn("datetime_utc", utc)
-    if value_col and value_is_volume:
-        out = out.withColumn(
-            value_col,
-            F.when(is_hourly, F.col(value_col) / 4).otherwise(F.col(value_col)),
-        )
-    return out.drop("_off", "_fecha_d", "_dim_fecha", "day_type", "day_start_offset")
+    df = tg.with_utc_from_quarter(df, dim, fecha=fecha, quarter_idx=idx)
+    divide = (value_col,) if value_col and value_is_volume else ()
+    return tg.expand_hourly_to_15min(df, is_hourly, divide_cols=divide)
 
 
 def parse_european_number(col: F.Column) -> F.Column:

@@ -1,7 +1,7 @@
 """ESIOS price pipeline — Spark rendering of
 TransformadorESIOS/ESIOSProcessor.transform_price_data
 (_procesador_esios.py:301-367): geo filter → indicator→market map →
-rounding → granularity harmonization to the 15-min grid → finalize.
+rounding → hourly→15-min expansion via the time kernel → finalize.
 
 The whole pipeline is one lazy DataFrame chain; the only action is the
 lake upsert. Dims broadcast; the fact side never shuffles except for
@@ -39,28 +39,6 @@ def map_market_id(df: DataFrame, spark: SparkSession) -> DataFrame:
     ).drop("_ind", "indicador_id")
 
 
-def harmonize_granularity(df: DataFrame) -> DataFrame:
-    """Hourly price rows expand ×4 onto the 15-min grid (prices
-    replicate, never divide — _procesador_esios.py:190-231); native
-    15-min rows pass through.
-
-    Single-pass: a conditional offsets array + one explode, instead of
-    filtering into two branches and unioning (which scans the source
-    twice — the union formulation doubled this pipeline's input I/O)."""
-    offs = F.when(
-        F.col("granularidad") == "Hora",
-        F.array(F.lit(0), F.lit(15), F.lit(30), F.lit(45)),
-    ).otherwise(F.array(F.lit(0)))
-    return (
-        df.withColumn("_off", F.explode(offs))
-        .withColumn(
-            "datetime_utc",
-            F.col("datetime_utc") + F.make_interval(mins=F.col("_off")),
-        )
-        .drop("_off")
-    )
-
-
 def transform_price_data(spark: SparkSession, raw: DataFrame) -> DataFrame:
     """raw_precios_esios → processed `precios` (15-min UTC grid)."""
     df = (
@@ -68,6 +46,8 @@ def transform_price_data(spark: SparkSession, raw: DataFrame) -> DataFrame:
         .withColumn("datetime_utc", F.to_timestamp("datetime_utc"))
         .withColumn("precio", F.round(F.col("value"), 2))
         .transform(lambda d: map_market_id(d, spark))
-        .transform(harmonize_granularity)
+        # hourly prices replicate onto the 15-min grid, never divide
+        # (_procesador_esios.py:190-231); 15-min rows pass through
+        .transform(lambda d: tg.expand_hourly_to_15min(d, F.col("granularidad") == "Hora"))
     )
     return validate(df.select("datetime_utc", "id_mercado", "precio"), "precios")

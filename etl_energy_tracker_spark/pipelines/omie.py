@@ -34,27 +34,17 @@ def signed_energy(df: DataFrame) -> DataFrame:
 
 
 def with_datetime(df: DataFrame, dim: DataFrame) -> DataFrame:
-    """Hora is either a 1-based local hour index ('1'..'25') or 'HxQy'.
-    Single pass over the source (the round-1 version filtered into two
-    branches and unioned — two scans): hour rows conditionally explode
-    ×4 into their quarter offsets (volumes ÷4), HxQy rows explode ×1,
-    and one broadcast dim join computes UTC for both via the shared
-    elapsed-time kernel (_procesador_omie.py:277-296). Hour labels are
-    *positions* in the local day, so quarter index (h−1)*4+1+off is
-    exactly the elapsed-quarter grid on DST days too."""
-    is_hq = F.col("Hora").rlike("^H\\d+Q\\d+$")
-    offs = F.when(is_hq, F.array(F.lit(0))).otherwise(
-        F.array(F.lit(0), F.lit(1), F.lit(2), F.lit(3))
+    """Hora is either a 1-based local hour position ('1'..'25') or
+    'HxQy' (_procesador_omie.py:277-296). Both are quarter indices of
+    the local day — an hour position h starts at quarter (h−1)·4+1, on
+    DST days too — so UTC comes from the one conversion, then hour rows
+    expand ×4 (volumes ÷4). A NULL Hora counts as an hour row."""
+    is_hq = F.coalesce(F.col("Hora").rlike("^H\\d+Q\\d+$"), F.lit(False))
+    idx = F.when(is_hq, tg.parse_omie_period(F.col("Hora"))).otherwise(
+        (F.col("Hora").cast("int") - 1) * 4 + 1
     )
-    df = df.withColumn("_qoff", F.explode(offs))
-    qidx = F.when(is_hq, tg.parse_omie_period(F.col("Hora"))).otherwise(
-        (F.col("Hora").cast("int") - 1) * 4 + 1 + F.col("_qoff")
-    )
-    df = tg.with_utc_from_quarter(df, dim, fecha="Fecha", quarter_idx=qidx)
-    return df.withColumn(
-        "volumenes",
-        F.when(is_hq, F.col("volumenes")).otherwise(F.col("volumenes") / 4),
-    ).drop("_qoff")
+    df = tg.with_utc_from_quarter(df, dim, fecha="Fecha", quarter_idx=idx)
+    return tg.expand_hourly_to_15min(df, ~is_hq, divide_cols=("volumenes",))
 
 
 def aggregate_volumes(df: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import timegrid as tg
 from ..functions.stable import stable_avg, stable_avg_expr, stable_sum, stable_sum_expr
 from ..sources.registry import load_table
 from .catalog import register
@@ -63,22 +64,20 @@ def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("time", "reshape"),
     doc="A4 hourly→15-min expansion: each hourly row ×4 with +0/15/30/45 "
-    "offsets, volumes ÷4 (etl_date_utils.py:826-863). explode() keeps it "
-    "fully distributed — no driver loop.",
+    "offsets, volumes ÷4 (etl_date_utils.py:826-863), through the "
+    "pipelines' own kernel (timegrid.expand_hourly_to_15min). explode() "
+    "keeps it fully distributed — no driver loop.",
 )
 def expand_hourly_to_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour_ts")).agg(
         stable_sum("value", "hour_value")
     )
-    return (
-        hourly.withColumn("off", F.explode(F.array(F.lit(0), F.lit(15), F.lit(30), F.lit(45))))
-        .select(
-            F.expr("hour_ts + make_interval(0, 0, 0, 0, 0, off, 0)").alias(
-                "datetime_15min"
-            ),
-            (F.col("hour_value") / 4).alias("value_15min"),
-        )
+    return tg.expand_hourly_to_15min(
+        hourly, F.lit(True), ts_col="hour_ts", divide_cols=("hour_value",)
+    ).select(
+        F.col("hour_ts").alias("datetime_15min"),
+        F.col("hour_value").alias("value_15min"),
     )
 
 
@@ -305,8 +304,6 @@ def madrid_local_to_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fact side never shuffles.",
 )
 def quarter_to_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..timegrid import dst_dim, with_utc_from_quarter
-
     ev = load_table(spark, "events", sf_dir)
     df = ev.select(
         "event_id",
@@ -315,7 +312,7 @@ def quarter_to_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fecha"),
         ((F.col("event_id") % 96) + 1).cast("int").alias("quarter_idx"),
     )
-    return with_utc_from_quarter(df, dst_dim(spark)).select(
+    return tg.with_utc_from_quarter(df, tg.dst_dim(spark)).select(
         "event_id", "fecha", "quarter_idx", "datetime_utc"
     )
 

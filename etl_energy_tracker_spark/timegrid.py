@@ -14,12 +14,18 @@ built from the EU rule (last Sunday of March springs forward at
 public EU directive 2000/84/EC, same rule the reference derives from
 pytz internals).
 
-The conversion uses the *elapsed-time formulation*: a local day's
-k-th label denotes `local_midnight_utc + elapsed` where
-`local_midnight_utc = fecha 00:00 − day_start_offset`. This makes
-23/25-hour days fall out automatically — no row-wise Python, no
-special-casing in the hot path (the reference's fast/slow split at
-etl_date_utils.py:96-134 disappears).
+Every source reaches the 15-min UTC grid through two functions:
+
+- :func:`with_utc_from_quarter` is the one local→UTC conversion. A
+  local day's k-th quarter is ``local_midnight_utc + (k−1)·15 min``
+  with ``local_midnight_utc = fecha 00:00 − day_start_offset``. The
+  formulation is linear in elapsed time, so every source label is a
+  quarter index of its local day — 15-min labels directly, hourly DST
+  labels via :func:`hourly_quarter_idx`, OMIE hour positions as
+  ``(h−1)·4+1`` — and 23/25-hour days need no special case.
+- :func:`expand_hourly_to_15min` is the one granularity expansion: it
+  runs in UTC after the conversion and turns each hourly row into its
+  four quarters.
 """
 
 from __future__ import annotations
@@ -158,28 +164,12 @@ def elapsed_hours(day_type: Column, hour: Column, suffix: Column) -> Column:
     )
 
 
-def with_utc_from_hourly(
-    df: DataFrame,
-    dim: DataFrame,
-    fecha: str = "fecha",
-    hora: str = "hora",
-    out: str = "datetime_utc",
-) -> DataFrame:
-    """Attach ``datetime_utc`` from a local date + hourly label."""
-    base, suffix = parse_hour_label(F.col(hora))
-    d = dim.select(
-        F.col("fecha").alias("_dim_fecha"), "day_type", "day_start_offset"
-    )
-    joined = df.withColumn("_fecha_d", F.to_date(fecha)).join(
-        F.broadcast(d), F.col("_fecha_d") == F.col("_dim_fecha"), "left"
-    )
-    elapsed = elapsed_hours(F.col("day_type"), base, suffix)
-    utc = F.to_timestamp(F.col("_fecha_d")) + F.make_interval(
-        hours=elapsed - F.col("day_start_offset")
-    )
-    return joined.withColumn(out, utc).drop(
-        "_fecha_d", "_dim_fecha", "day_type", "day_start_offset"
-    )
+def hourly_quarter_idx(hora: Column) -> Column:
+    """DST-suffixed hourly label → 1-based quarter index of its hour
+    start. Reads the ``day_type`` that :func:`with_utc_from_quarter`
+    joins, so it is only valid inside that call's ``quarter_idx``."""
+    base, suffix = parse_hour_label(hora)
+    return elapsed_hours(F.col("day_type"), base, suffix) * 4 + 1
 
 
 def with_utc_from_quarter(
@@ -189,17 +179,19 @@ def with_utc_from_quarter(
     quarter_idx: Column | str = "quarter_idx",
     out: str = "datetime_utc",
 ) -> DataFrame:
-    """Attach ``datetime_utc`` from a local date + 1-based 15-min index."""
+    """Attach ``datetime_utc`` from a local date + 1-based 15-min index:
+    ``fecha 00:00 + (idx−1)·15 min − day_start_offset·60 min``. The
+    index expression may read the joined ``day_type``."""
     idx = F.col(quarter_idx) if isinstance(quarter_idx, str) else quarter_idx
-    d = dim.select(F.col("fecha").alias("_dim_fecha"), "day_start_offset")
-    joined = df.withColumn("_fecha_d", F.to_date(fecha)).join(
-        F.broadcast(d), F.col("_fecha_d") == F.col("_dim_fecha"), "left"
-    )
-    utc = F.to_timestamp(F.col("_fecha_d")) + F.make_interval(
+    d = dim.select(F.col("fecha").alias("_dim_fecha"), "day_type", "day_start_offset")
+    local_day = F.to_date(fecha)
+    utc = F.to_timestamp(local_day) + F.make_interval(
         mins=(idx - 1) * 15 - F.col("day_start_offset") * 60
     )
-    return joined.withColumn(out, utc).drop(
-        "_fecha_d", "_dim_fecha", "day_start_offset"
+    return (
+        df.join(F.broadcast(d), local_day == F.col("_dim_fecha"), "left")
+        .withColumn(out, utc)
+        .drop("_dim_fecha", "day_type", "day_start_offset")
     )
 
 
@@ -217,19 +209,24 @@ def utc_to_madrid_date(ts: Column) -> Column:
 
 def expand_hourly_to_15min(
     df: DataFrame,
+    hourly: Column,
     ts_col: str = "datetime_utc",
     divide_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Each hourly row ×4 at +0/15/30/45 min; ``divide_cols`` (volumes)
-    are divided by 4, other value columns (prices) replicate.
-    Reference: etl_date_utils.py:826-863. Pure explode — distributed,
-    no shuffle."""
-    out = df.withColumn(
-        "_off", F.explode(F.array(F.lit(0), F.lit(15), F.lit(30), F.lit(45)))
-    ).withColumn(ts_col, F.col(ts_col) + F.make_interval(mins=F.col("_off")))
-    for c in divide_cols:
-        out = out.withColumn(c, F.col(c) / 4)
-    return out.drop("_off")
+    """Rows where ``hourly`` holds become 4 rows at +0/15/30/45 min with
+    ``divide_cols`` (volumes) ÷4, other value columns (prices)
+    replicating; all other rows, NULL predicate included, pass through.
+    Reference: etl_date_utils.py:826-863. One conditional explode —
+    distributed, no shuffle, one scan of the source."""
+    is_h = F.coalesce(hourly, F.lit(False))
+    offs = F.when(
+        is_h, F.array(F.lit(0), F.lit(15), F.lit(30), F.lit(45))
+    ).otherwise(F.array(F.lit(0)))
+    # one withColumns: every replacement reads the exploded row's input
+    # values, and each DataFrame call costs a driver-side analysis
+    shifted = {ts_col: F.col(ts_col) + F.make_interval(mins=F.col("_off"))}
+    shifted |= {c: F.when(is_h, F.col(c) / 4).otherwise(F.col(c)) for c in divide_cols}
+    return df.withColumn("_off", F.explode(offs)).withColumns(shifted).drop("_off")
 
 
 def rollup_15min_to_hourly(
@@ -256,7 +253,7 @@ def with_local_labels(
     """Inverse kernel: UTC instant → Madrid local (fecha, hourly label
     with DST suffix, 1-based quarter index) — what a writer producing
     reference-shaped raw files needs (the exact inverse of
-    with_utc_from_hourly / with_utc_from_quarter).
+    with_utc_from_quarter with either index).
 
     Fall-back days label the repeated local hour 2 as '02-03a' (first
     occurrence, CEST) or '02-03b' (second, CET), disambiguated by the

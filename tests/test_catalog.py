@@ -147,9 +147,6 @@ def test_query_runs(spark, name):
 
 @pytest.mark.parametrize("name", ORACLE_SAMPLE)
 def test_query_matches_oracle(spark, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from check_correctness import frame_digest
 
     sdf = QUERIES[name](spark, SF_DIR)

@@ -12,13 +12,10 @@ Regenerate deliberately after an intentional plan change:
 from __future__ import annotations
 
 import json
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
-
-from plan_audit import (  # noqa: E402
+from plan_audit import (
     BOUNDED_SINGLE_PARTITION,
     SNAPSHOT_PATH,
     SNAPSHOT_SF_DIR,
@@ -73,7 +70,6 @@ def test_plans_match_snapshot(spark):
 
 def test_single_partition_allowlist_names_resolve():
     """Every allowlist entry names a live catalog query (no rot)."""
-    sys.path.insert(0, "/root/repo")
     from etl_energy_tracker_spark.queries import catalog
 
     catalog._load_all()

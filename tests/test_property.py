@@ -10,9 +10,11 @@ from __future__ import annotations
 import pytest
 
 import datetime as dt
+import re
 from zoneinfo import ZoneInfo
 
 import duckdb
+from conftest import madrid_quarters_utc
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -22,12 +24,18 @@ from etl_energy_tracker_spark.functions.hashing import (
     duckdb_charhash,
     spark_charhash,
 )
-from etl_energy_tracker_spark.pipelines.common import parse_european_number
+from etl_energy_tracker_spark.pipelines.common import (
+    parse_european_number,
+    standardize_datetime,
+)
 
 MAD = ZoneInfo("Europe/Madrid")
 UTC = ZoneInfo("UTC")
 
-dates = st.dates(min_value=dt.date(2001, 1, 1), max_value=dt.date(2034, 12, 31))
+# random dates, with the DST transition days drawn as often as the rest
+dates = st.dates(
+    min_value=dt.date(2001, 1, 1), max_value=dt.date(2034, 12, 31)
+) | st.sampled_from([d for d, _ in tg.madrid_transitions(2001, 2034)])
 
 
 def _expected_utc(d: dt.date, hour: int, suffix: str) -> dt.datetime:
@@ -53,13 +61,38 @@ def test_hourly_kernel_matches_zoneinfo(spark, cases):
             expected[(d.isoformat(), label)] = _expected_utc(d, h, s)
     if not rows:
         return
-    df = spark.createDataFrame(rows, "fecha string, hora string")
-    dim = tg.dst_dim(spark, 2000, 2035)
-    got = {
-        (r["fecha"], r["hora"]): r["datetime_utc"]
-        for r in tg.with_utc_from_hourly(df, dim).collect()
+    got = _standardized(spark, rows, "Hora")
+    assert got == {
+        k: [t + dt.timedelta(minutes=m) for m in (0, 15, 30, 45)]
+        for k, t in expected.items()
     }
-    assert got == expected
+
+
+def _standardized(spark, rows, granularity):
+    """(fecha, hora) labels through the pipelines' standardize_datetime
+    → sorted UTC instants per label."""
+    df = spark.createDataFrame(
+        [(f, h, granularity) for f, h in rows],
+        "fecha string, hora string, granularity string",
+    )
+    got: dict = {}
+    for r in standardize_datetime(df, tg.dst_dim(spark, 2000, 2035)).collect():
+        got.setdefault((r["fecha"], r["hora"]), []).append(r["datetime_utc"])
+    return {k: sorted(v) for k, v in got.items()}
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.lists(st.tuples(dates, st.integers(1, 100)), min_size=1, max_size=40))
+def test_quarter_kernel_matches_zoneinfo(spark, cases):
+    """15-min labels '1'..'92/96/100': the k-th label is the k-th
+    quarter-hour of the local day per the tz database."""
+    rows, expected = [], {}
+    for d, k in cases:
+        quarters = madrid_quarters_utc(d)
+        k = (k - 1) % len(quarters) + 1
+        rows.append((d.isoformat(), str(k)))
+        expected[(d.isoformat(), str(k))] = [quarters[k - 1]]
+    assert _standardized(spark, rows, "Quince minutos") == expected
 
 
 amounts = st.decimals(
@@ -175,6 +208,31 @@ def test_simhash_vectorized_matches_scalar_fold(spark, texts_in):
     }
     for i, s in rows:
         assert got[i] == py_simhash(s), repr(s)
+
+
+def test_simhash_nul_tokens_in_one_batch(spark):
+    """The slow test's fixed NUL cases in ONE Arrow batch, where 'ab'
+    and 'ab\\x00' must stay two tokens, against the scalar fold."""
+    from etl_energy_tracker_spark.operators.dedup import with_simhash
+
+    def fold(tok: str, acc: int) -> int:
+        for ch in tok:
+            acc = (acc * 31 + ord(ch)) % MOD
+        return acc
+
+    def scalar_simhash(text: str) -> int:
+        # seed-7 hash votes bits 0-29, seed-13 bits 30-59
+        votes = [0] * 60
+        for t in re.split(r"[ \t\n\x0b\f\r]+", text.strip(" ")):
+            h = (fold(t, 7), fold(t, 13))
+            for b in range(60):
+                votes[b] += 1 if (h[b // 30] >> (b % 30)) & 1 else -1
+        return sum(1 << b for b in range(60) if votes[b] > 0)
+
+    texts = ["a\x00b c", "ab\x00 c", "\x00", "ab c"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, s string").coalesce(1)
+    got = {r["i"]: r["simhash"] for r in with_simhash(df, "s").collect()}
+    assert got == {i: scalar_simhash(s) for i, s in enumerate(texts)}
 
 
 # --------------------------------------- connected components: star vs label-prop

@@ -8,12 +8,16 @@ zoneinfo, not derived from the implementation.
 from __future__ import annotations
 
 import datetime as dt
+from collections import defaultdict
 from zoneinfo import ZoneInfo
 
 import pytest
+from conftest import madrid_quarters_utc
 from pyspark.sql import functions as F
 
 from etl_energy_tracker_spark import timegrid as tg
+from etl_energy_tracker_spark.pipelines import omie
+from etl_energy_tracker_spark.pipelines.common import standardize_datetime
 
 MAD = ZoneInfo("Europe/Madrid")
 UTC = ZoneInfo("UTC")
@@ -72,14 +76,27 @@ HOURLY_CASES = [
 ]
 
 
-def test_hourly_to_utc(spark, dim):
+def _hourly_quarters(spark, dim, labels):
+    """(fecha, hourly label) pairs through the pipelines' own
+    standardize_datetime → each label's sorted 15-min UTC instants."""
     df = spark.createDataFrame(
-        [(f, h) for f, h, _ in HOURLY_CASES], "fecha string, hora string"
+        [(f, h, "Hora") for f, h in labels],
+        "fecha string, hora string, granularity string",
     )
-    out = tg.with_utc_from_hourly(df, dim)
-    got = {(r["fecha"], r["hora"]): r["datetime_utc"] for r in out.collect()}
+    got = defaultdict(list)
+    for r in standardize_datetime(df, dim).collect():
+        got[(r["fecha"], r["hora"])].append(r["datetime_utc"])
+    return {k: sorted(v) for k, v in got.items()}
+
+
+def _quarters_from(start: dt.datetime) -> list[dt.datetime]:
+    return [start + dt.timedelta(minutes=m) for m in (0, 15, 30, 45)]
+
+
+def test_hourly_to_utc(spark, dim):
+    got = _hourly_quarters(spark, dim, [(f, h) for f, h, _ in HOURLY_CASES])
     for f, h, exp in HOURLY_CASES:
-        assert got[(f, h)] == dt.datetime.fromisoformat(exp), (f, h)
+        assert got[(f, h)] == _quarters_from(dt.datetime.fromisoformat(exp)), (f, h)
 
 
 def test_hourly_matches_zoneinfo_on_normal_days(spark, dim):
@@ -90,13 +107,9 @@ def test_hourly_matches_zoneinfo_on_normal_days(spark, dim):
         for h in range(24):
             local = dt.datetime(d.year, d.month, d.day, h, tzinfo=MAD)
             cases.append((f, f"{h:02d}-{(h + 1) % 24:02d}", local.astimezone(UTC).replace(tzinfo=None)))
-    df = spark.createDataFrame([(f, h) for f, h, _ in cases], "fecha string, hora string")
-    got = {
-        (r["fecha"], r["hora"]): r["datetime_utc"]
-        for r in tg.with_utc_from_hourly(df, dim).collect()
-    }
+    got = _hourly_quarters(spark, dim, [(f, h) for f, h, _ in cases])
     for f, h, exp in cases:
-        assert got[(f, h)] == exp, (f, h)
+        assert got[(f, h)] == _quarters_from(exp), (f, h)
 
 
 QUARTER_CASES = [
@@ -122,15 +135,74 @@ def test_quarter_to_utc(spark, dim):
 
 
 def test_expand_hourly_divides_volumes(spark):
+    t = dt.datetime(2024, 1, 15, 10)
     df = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 15, 10), 100.0, 42.0)],
-        "datetime_utc timestamp, volumenes double, precio double",
+        [("Hora", t, 100.0, 42.0), ("Quince minutos", t, 100.0, 42.0), (None, t, 100.0, 42.0)],
+        "granularity string, datetime_utc timestamp, volumenes double, precio double",
     )
-    out = tg.expand_hourly_to_15min(df, divide_cols=("volumenes",)).collect()
-    assert len(out) == 4
-    assert sorted(r["datetime_utc"].minute for r in out) == [0, 15, 30, 45]
-    assert all(r["volumenes"] == 25.0 for r in out)
-    assert all(r["precio"] == 42.0 for r in out)  # prices replicate
+    out = tg.expand_hourly_to_15min(
+        df, F.col("granularity") == "Hora", divide_cols=("volumenes",)
+    )
+    assert out.columns == df.columns
+    got = sorted((r["granularity"] or "", r["datetime_utc"], r["volumenes"], r["precio"]) for r in out.collect())
+    # only the hourly row expands (prices replicate); a NULL predicate
+    # passes through like a false one
+    assert got == sorted(
+        [("Hora", q, 25.0, 42.0) for q in _quarters_from(t)]
+        + [("Quince minutos", t, 100.0, 42.0), ("", t, 100.0, 42.0)]
+    )
+
+
+def test_standardize_null_hora_and_granularity(spark, dim):
+    df = spark.createDataFrame(
+        [
+            ("2024-01-15", None, "Hora", 8.0),  # 4 quarters, unknown instant
+            ("2024-01-15", None, "Quince minutos", 8.0),
+            ("2024-01-15", "41", None, 8.0),  # NULL granularity: a quarter label
+            ("2024-01-15", None, None, 8.0),
+        ],
+        "fecha string, hora string, granularity string, volumenes double",
+    )
+    got = sorted(
+        ((r["hora"] or "", r["granularity"] or ""), r["datetime_utc"] or dt.datetime.min, r["volumenes"])
+        for r in standardize_datetime(df, dim, value_col="volumenes").collect()
+    )
+    assert got == sorted(
+        [(("", "Hora"), dt.datetime.min, 2.0)] * 4
+        + [
+            (("", "Quince minutos"), dt.datetime.min, 8.0),
+            (("41", ""), dt.datetime(2024, 1, 15, 9), 8.0),
+            (("", ""), dt.datetime.min, 8.0),
+        ]
+    )
+
+
+@pytest.mark.parametrize("fecha,n_hours", [("2024-03-31", 23), ("2024-10-27", 25)])
+def test_omie_labels_match_zoneinfo_on_dst_days(spark, dim, fecha, n_hours):
+    """OMIE hour positions 1..23/1..25 and every HxQy label land on the
+    tz database's quarters of the local day."""
+    quarters = madrid_quarters_utc(dt.date.fromisoformat(fecha))
+    assert len(quarters) == n_hours * 4
+    rows = [(fecha, str(h), 4.0) for h in range(1, n_hours + 1)] + [
+        (fecha, f"H{h}Q{q}", 1.0) for h in range(1, n_hours + 1) for q in range(1, 5)
+    ]
+    df = spark.createDataFrame(rows, "Fecha string, Hora string, volumenes double")
+    got = defaultdict(list)
+    for r in omie.with_datetime(df, dim).collect():
+        got[r["Hora"]].append((r["datetime_utc"], r["volumenes"]))
+    for h in range(1, n_hours + 1):
+        hour = quarters[(h - 1) * 4 : h * 4]
+        assert sorted(got[str(h)]) == [(t, 1.0) for t in hour], h
+        for q in range(1, 5):
+            assert got[f"H{h}Q{q}"] == [(hour[q - 1], 1.0)], (h, q)
+
+
+def test_omie_null_hora_is_an_hour_row(spark, dim):
+    df = spark.createDataFrame(
+        [("2024-01-15", None, 8.0)], "Fecha string, Hora string, volumenes double"
+    )
+    got = [(r["datetime_utc"], r["volumenes"]) for r in omie.with_datetime(df, dim).collect()]
+    assert got == [(None, 2.0)] * 4
 
 
 def test_rollup_15min_to_hourly(spark):
@@ -156,8 +228,10 @@ def test_round_trip_expand_rollup(spark, dim):
          for h, s in [(0, ""), (1, ""), (2, "a"), (2, "b"), (3, ""), (12, "")]],
         "fecha string, hora string, precio double",
     )
-    hourly = tg.with_utc_from_hourly(df, dim).select("datetime_utc", "precio")
-    q = tg.expand_hourly_to_15min(hourly)
+    hourly = tg.with_utc_from_quarter(
+        df, dim, quarter_idx=tg.hourly_quarter_idx(F.col("hora"))
+    ).select("datetime_utc", "precio")
+    q = tg.expand_hourly_to_15min(hourly, F.lit(True))
     back = tg.rollup_15min_to_hourly(q, mean_cols=("precio",))
     a = {r["datetime_utc"]: r["precio"] for r in hourly.collect()}
     b = {r["datetime_utc"]: r["precio"] for r in back.collect()}
@@ -192,8 +266,11 @@ def test_inverse_labels_round_trip(spark, dim):
 
     # hourly round trip on the on-the-hour rows
     hourly = labeled.where(F.minute("datetime_utc").isin(0) & (F.minute(F.from_utc_timestamp("datetime_utc", "Europe/Madrid")) == 0))
-    back_h = tg.with_utc_from_hourly(
-        hourly.select("datetime_utc", "fecha", "hora"), dim, out="utc_back"
+    back_h = tg.with_utc_from_quarter(
+        hourly.select("datetime_utc", "fecha", "hora"),
+        dim,
+        quarter_idx=tg.hourly_quarter_idx(F.col("hora")),
+        out="utc_back",
     )
     assert back_h.where(F.col("utc_back") != F.col("datetime_utc")).count() == 0
 

@@ -12,13 +12,15 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_energy_tracker_spark.queries import catalog  # noqa: E402
 from etl_energy_tracker_spark.session import get_spark  # noqa: E402

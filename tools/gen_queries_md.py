@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_energy_tracker_spark.queries import catalog  # noqa: E402
 
@@ -31,6 +33,6 @@ for mod in sorted(by_mod):
         doc = " ".join((e.doc or "").split())
         lines.append(f"| `{e.name}` | {', '.join(sorted(e.tags))} | {doc} |")
 
-with open("/root/repo/QUERIES.md", "w") as f:
+with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
     f.write("\n".join(lines) + "\n")
 print(f"wrote QUERIES.md: {n} entries, {n_oracle} with oracles")

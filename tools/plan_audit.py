@@ -19,9 +19,11 @@ until the snapshot is regenerated deliberately.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_energy_tracker_spark.queries import catalog  # noqa: E402
 from etl_energy_tracker_spark.session import get_spark  # noqa: E402
@@ -218,7 +220,7 @@ def audit(sf_dir: str) -> list[dict]:
     return rows
 
 
-SNAPSHOT_PATH = "/root/repo/tools/plan_snapshot.json"
+SNAPSHOT_PATH = os.path.join(ROOT, "tools", "plan_snapshot.json")
 # the plan fingerprint is taken at this SF so the committed snapshot
 # and the pytest gate always compare like with like
 SNAPSHOT_SF_DIR = "/root/testdata/sf0.001"

@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_energy_tracker_spark.queries import catalog  # noqa: E402
 from etl_energy_tracker_spark.session import get_spark  # noqa: E402
@@ -45,12 +46,13 @@ def main() -> int:
     for name in args.queries:
         fn = qs[name]
         if args.explain:
-            os.makedirs(f"/root/repo/plans/{args.plandir}", exist_ok=True)
+            plandir = os.path.join(ROOT, "plans", args.plandir)
+            os.makedirs(plandir, exist_ok=True)
             df = fn(spark, args.sf)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(f"/root/repo/plans/{args.plandir}/{name}_{args.explain}.txt", "w") as f:
+            with open(os.path.join(plandir, f"{name}_{args.explain}.txt"), "w") as f:
                 f.write(txt)
         runs = []
         for _ in range(args.runs):
