@@ -14,6 +14,7 @@ processAllAvailable for tests/oracle comparison.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,12 +60,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Last-driven streaming query's physical plan, captured for the plan
 # tripwire (tools/plan_audit.py): streaming plans live in the
 # streaming runtime, not the returned memory-sink DataFrame, so the
-# drive path records explainInternal() before stopping the query.
-_LAST_STREAM_PLAN: list[str | None] = [None]
+# drive path records explainInternal() before stopping the query. Held
+# per thread, not in a module-level list: catalog fingerprints hash
+# module globals as constants, so runtime state must not live in one.
+_LAST_STREAM_PLAN = threading.local()
 
 
 def last_stream_plan() -> str | None:
-    return _LAST_STREAM_PLAN[0]
+    return getattr(_LAST_STREAM_PLAN, "plan", None)
 
 
 def _finish(q, wait: str = "processAll") -> None:
@@ -76,9 +79,9 @@ def _finish(q, wait: str = "processAll") -> None:
         else:
             q.processAllAvailable()
         try:
-            _LAST_STREAM_PLAN[0] = q._jsq.explainInternal(False)
+            _LAST_STREAM_PLAN.plan = q._jsq.explainInternal(False)
         except Exception:
-            _LAST_STREAM_PLAN[0] = None
+            _LAST_STREAM_PLAN.plan = None
     finally:
         q.stop()
 

@@ -31,6 +31,7 @@ Every source reaches the 15-min UTC grid through two functions:
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,9 +54,7 @@ def madrid_transitions(start_year: int = 2000, end_year: int = 2035) -> list[tup
     return out
 
 
-_DST_DIM_CACHE: dict[tuple[int, int, int], DataFrame] = {}
-
-
+@functools.cache
 def dst_dim(spark: SparkSession, start_year: int = 2000, end_year: int = 2035) -> DataFrame:
     """Per-date dimension for every day in range — tiny (~13k rows),
     always broadcast. Columns:
@@ -68,11 +67,9 @@ def dst_dim(spark: SparkSession, start_year: int = 2000, end_year: int = 2035) -
     Built entirely JVM-side (exploded date sequence + the EU last-Sunday
     rule as column expressions) — shipping 13k Python rows through
     createDataFrame cost ~1 s of py4j serialization on every pipeline
-    call. The plan is memoized per SparkContext."""
-    key = (id(spark.sparkContext), start_year, end_year)
-    cached = _DST_DIM_CACHE.get(key)
-    if cached is not None:
-        return cached
+    call. The plan is memoized per session (``functools.cache``, not a
+    module-level dict: catalog fingerprints hash module globals as
+    constants, so runtime state must not live in one)."""
 
     def last_sunday(month: int) -> Column:
         last = F.last_day(F.make_date(F.col("y"), F.lit(month), F.lit(1)))
@@ -103,7 +100,6 @@ def dst_dim(spark: SparkSession, start_year: int = 2000, end_year: int = 2035) -
         n_hours.cast("tinyint").alias("n_hours"),
         (n_hours * 4).cast("smallint").alias("n_quarters"),
     )
-    _DST_DIM_CACHE[key] = dim
     return dim
 
 

@@ -6,6 +6,8 @@ and the driver's t2 gate).
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 import pytest
 
@@ -45,77 +47,31 @@ def test_catalog_is_populated():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def _verified_frozensets() -> dict[str, frozenset]:
-    return {
-        attr: getattr(catalog, attr)
-        for attr in dir(catalog)
-        if attr.endswith("_VERIFIED") and isinstance(getattr(catalog, attr), frozenset)
-    }
-
-
-def test_priority_queue_names_resolve():
-    # a typo in the re-verification bookkeeping would silently reorder
-    # the driver's capped run — every queue name must be a real query
-    names = set(QUERIES)
-    assert set(catalog._PRIORITY) <= names
-    for attr, fs in _verified_frozensets().items():
-        assert fs <= names, attr
-    # and the ordering is a permutation of the catalog (no dupes/drops)
+def test_ordered_is_a_permutation_with_changed_first():
     ordered = catalog._ordered()
-    assert sorted(ordered) == sorted(names)
+    assert sorted(ordered) == sorted(catalog.CATALOG)
+    changed = catalog.changed()
+    assert ordered[: len(changed)] == changed
+    registration = list(catalog.CATALOG)
+    for group in (changed, ordered[len(changed):]):
+        assert group == sorted(group, key=registration.index)
 
 
-def test_verified_freeze_is_current():
-    """The round-close freeze ritual, mechanically enforced.
-
-    Rounds 4, 6 and 7 all ended with the newest CORRECTNESS greens
-    absent from the _RN_VERIFIED bookkeeping, so the next round's
-    capped (~50) driver run re-proved old rows instead of checking
-    never-verified queries (VERDICT r7 "What's wrong" §2). This test
-    fails until every green name in the NEWEST CORRECTNESS_r*.json is
-    frozen into some _RN_VERIFIED set — making the skip impossible.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    runs = sorted(
-        repo.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if not runs:
-        pytest.skip("no driver CORRECTNESS file yet")
-    newest = runs[-1]
-    rows = json.loads(newest.read_text())
-    greens = {
-        name
-        for name, row in rows.items()
-        if row.get("rows_match") and row.get("err") is None
-    }
-    frozen = frozenset().union(*_verified_frozensets().values())
-    missing = sorted(greens - frozen)
-    assert not missing, (
-        f"{newest.name} greens not frozen into any _RN_VERIFIED set "
-        f"(run the round-close freeze ritual): {missing}"
-    )
+def test_missing_name_is_emitted_first(tmp_path, monkeypatch):
+    fingerprints = catalog.fingerprints()
+    last = list(fingerprints)[-1]
+    record = {n: fp for n, fp in fingerprints.items() if n != last}
+    (tmp_path / "verified.json").write_text(json.dumps(record))
+    monkeypatch.setattr(catalog, "VERIFIED_PATH", tmp_path / "verified.json")
+    assert catalog.changed() == [last]
+    assert catalog._ordered()[0] == last
+    assert list(catalog.queries())[0] == last
 
 
-def test_frozen_names_pruned_from_priority():
-    """Freeze-without-prune loophole, closed (VERDICT r8 top_next §2).
-
-    _ordered() computes `verified - set(_PRIORITY)`, so a frozen name
-    left in _PRIORITY silently re-emits first and burns a slot of the
-    driver's ~50-row cap. A frozen name may sit in the queue ONLY via
-    _REVERIFY (impl changed after its green row — the documented,
-    dated rationale lives in the comment above that tuple).
-    """
-    frozen = frozenset().union(*_verified_frozensets().values())
-    stale = sorted((set(catalog._PRIORITY) - set(catalog._REVERIFY)) & frozen)
-    assert not stale, (
-        "frozen names in _PRIORITY without a _REVERIFY rationale "
-        f"(prune them or move to _REVERIFY with a dated comment): {stale}"
-    )
+def test_verified_names_are_live_queries():
+    record = json.loads(catalog.VERIFIED_PATH.read_text())
+    dead = sorted(set(record) - set(QUERIES))
+    assert not dead, f"verified.json names no live query: {dead}"
 
 
 # Fast-tier smoke set for the per-query build-and-run check: the

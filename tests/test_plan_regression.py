@@ -5,6 +5,9 @@ grows a query's shuffle count, loses its pushdown, or introduces
 row-at-a-time Python eval fails here — the gate that would have caught
 an accidental broadcast→shuffle flip before a bench run did.
 
+The full check over every query is ``slow``; the fast tier runs it on
+the queries ``catalog.changed()`` names.
+
 Regenerate deliberately after an intentional plan change:
     python tools/plan_audit.py --snapshot
 """
@@ -23,12 +26,10 @@ from plan_audit import (
 )
 
 
-@pytest.mark.slow
-def test_plans_match_snapshot(spark):
+def _regressions(current: dict) -> list[str]:
+    """Snapshot checks of the audited plans in ``current``."""
     with open(SNAPSHOT_PATH) as f:
         pinned = json.load(f)
-    current = snapshot(SNAPSHOT_SF_DIR)
-
     problems = []
     for name, cur in current.items():
         pin = pinned.get(name)
@@ -65,6 +66,27 @@ def test_plans_match_snapshot(spark):
                 f"{name}: sp_global grew "
                 f"{pin.get('sp_global')} -> {sp_glob}"
             )
+    return problems
+
+
+@pytest.mark.slow
+def test_plans_match_snapshot(spark):
+    problems = _regressions(snapshot(SNAPSHOT_SF_DIR))
+    assert not problems, "plan regressions:\n" + "\n".join(problems)
+
+
+def test_changed_plans_match_snapshot(spark):
+    """The same checks in the fast tier, on the queries whose code
+    changed since their last driver green (``catalog.changed()``)."""
+    from etl_energy_tracker_spark.queries import catalog
+
+    names = catalog.changed()
+    if not names:
+        pytest.skip("every query's fingerprint is recorded as verified")
+    current = snapshot(SNAPSHOT_SF_DIR, names)
+    unbuilt = sorted(set(names) - set(current))
+    assert not unbuilt, f"plan audit failed for: {unbuilt}"
+    problems = _regressions(current)
     assert not problems, "plan regressions:\n" + "\n".join(problems)
 
 

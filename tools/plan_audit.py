@@ -161,14 +161,16 @@ def _sp_classify(plan: str) -> tuple[int, int]:
     return scalar, glob
 
 
-def audit(sf_dir: str) -> list[dict]:
+def audit(sf_dir: str, names: list[str] | None = None) -> list[dict]:
+    """Plan figures of the named queries (all of them by default)."""
     from etl_energy_tracker_spark.streaming import jobs as stream_jobs
 
     spark = get_spark("plan-audit")
+    qs = catalog.queries()
     rows = []
-    for name, fn in catalog.queries().items():
+    for name in qs if names is None else names:
         try:
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             if name in _STREAMING:
                 plan = stream_jobs.last_stream_plan()
                 if plan is None:
@@ -226,11 +228,11 @@ SNAPSHOT_PATH = os.path.join(ROOT, "tools", "plan_snapshot.json")
 SNAPSHOT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def snapshot(sf_dir: str = SNAPSHOT_SF_DIR) -> dict:
+def snapshot(sf_dir: str = SNAPSHOT_SF_DIR, names: list[str] | None = None) -> dict:
     """Plan fingerprints keyed by query, for the committed snapshot."""
     return {
         r["query"]: {k: v for k, v in r.items() if k != "query"}
-        for r in audit(sf_dir)
+        for r in audit(sf_dir, names)
         if "error" not in r
     }
 
