@@ -21,12 +21,16 @@ Spark-first realization:
   present in the incoming batch are rewritten — at 100 TB a daily
   upsert touches a handful of (mercado, id, year, month) leaves, never
   the table.
-- an upsert evaluates its input once: the validated, partition-tagged
-  batch is checkpointed, its distinct partition tuples are collected
-  from the checkpoint, and the existing rows are read from exactly
-  those leaf directories, by path under `basePath`, with the declared
-  on-disk schema (`stored_schema`). No schema inference, no listing of
-  the whole dataset, no semi-join; readers use the same schema.
+- both zones merge through one pass (`Lake._merge_write`): the
+  incoming batch is checkpointed once, and the same job reports the
+  batch's distinct partition tuples through an observed
+  `collect_set` metric (no separate distinct `collect`); the
+  existing rows are read from exactly those leaf directories, by path
+  under `basePath`, with a known schema (`stored_schema` for processed
+  data, the batch's own schema for raw data), so no schema inference
+  and no listing of the whole dataset; the next `_ingest_seq` comes
+  from the touched files' Parquet footer statistics, read on the
+  driver, never from an aggregate job. Readers use the same schema.
 - files are written `sortWithinPartitions(datetime_utc)` so parquet
   row-group min/max statistics prune time-range scans (the reference
   tunes the same thing via pyarrow writer options,
@@ -36,8 +40,10 @@ Spark-first realization:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,6 +51,12 @@ from .config.market_config import MARKETS
 from .schemas import DEDUP_KEYS, PROCESSED_SCHEMAS, validate
 
 _PARTITION_COLS = ["mercado", "id_mercado", "year", "month"]
+
+# Most leaf partitions one merge may touch. The touched tuples reach
+# the driver as an observed metric and name the leaves it lists and
+# reads footers of; a daily delivery touches a handful, a multi-year
+# backfill of every market a few thousand.
+MAX_TOUCHED_LEAVES = 10_000
 
 
 def stored_schema(dataset: str) -> T.StructType:
@@ -60,14 +72,14 @@ def stored_schema(dataset: str) -> T.StructType:
     )
 
 
-def _leaf_dir(path: str, values) -> str:
+def _leaf_dir(path: str, cols: list[str], values) -> str:
     # partition values are market folders and ints, which Spark writes
     # unescaped; NULL goes to Hive's default partition
     return os.path.join(
         path,
         *[
             f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-            for c, v in zip(_PARTITION_COLS, values)
+            for c, v in zip(cols, values, strict=True)
         ],
     )
 
@@ -83,6 +95,42 @@ def _leaves(root: str):
         files = [f for f in filenames if f.endswith(".parquet")]
         if files:
             yield dirpath, files
+
+
+def _footer_max_seq(leaves: list[str], schema: T.StructType) -> int | None:
+    """Driver-side pass over the footers of every file a scan of
+    ``leaves`` reads (Spark skips ``_``/``.``-prefixed names).
+
+    Raises ``RuntimeError`` naming the file when a file holds a column
+    ``schema`` lacks (reading with ``schema`` and rewriting the leaf
+    would drop it) or, when ``schema`` has ``_ingest_seq``, when a
+    non-empty row group carries no ``_ingest_seq`` min/max statistics.
+    Returns the largest ``_ingest_seq`` those statistics record, or
+    ``None`` when there is none to read."""
+    names = set(schema.names)
+    top = None
+    for leaf in leaves:
+        for name in sorted(os.listdir(leaf)):
+            if name.startswith(("_", ".")):
+                continue
+            f = os.path.join(leaf, name)
+            md = pq.read_metadata(f)
+            cols = md.schema.to_arrow_schema().names
+            extra = sorted(set(cols) - names)
+            if extra:
+                raise RuntimeError(f"{f}: columns {extra} are not in the merge's read schema")
+            if "_ingest_seq" not in names:
+                continue
+            j = cols.index("_ingest_seq") if "_ingest_seq" in cols else None
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                if not rg.num_rows:
+                    continue
+                st = rg.column(j).statistics if j is not None else None
+                if st is None or not st.has_min_max:
+                    raise RuntimeError(f"{f}: no _ingest_seq min/max statistics")
+                top = st.max if top is None else max(top, st.max)
+    return top
 
 
 class Lake:
@@ -109,22 +157,15 @@ class Lake:
         """Append+dedup raw sink (K1): merge with existing rows of the
         touched (year, month) partitions, exact-row dedup (skipped for
         `continuo` — duplicates are legitimate trades), dynamic
-        partition overwrite."""
-        path = self.raw_path(mercado, dataset)
-        incoming = df
-        if self._exists(path):
-            existing = self.spark.read.parquet(path)
-            parts = [
-                (r[year_col], r[month_col])
-                for r in df.select(year_col, month_col).distinct().collect()
-            ]
-            cond = F.lit(False)
-            for y, m in parts:
-                cond = cond | ((F.col(year_col) == y) & (F.col(month_col) == m))
-            incoming = existing.where(cond).unionByName(df, allowMissingColumns=True)
-        if dedup:
-            incoming = incoming.dropDuplicates()
-        self._dyn_overwrite(incoming, path, [year_col, month_col])
+        partition overwrite. Existing rows read back with the batch's
+        own schema."""
+        self._merge_write(
+            df,
+            self.raw_path(mercado, dataset),
+            [year_col, month_col],
+            df.schema,
+            DataFrame.dropDuplicates if dedup else lambda merged: merged,
+        )
 
     def read_raw(self, mercado: str, dataset: str) -> DataFrame:
         return self.spark.read.parquet(self.raw_path(mercado, dataset))
@@ -146,53 +187,90 @@ class Lake:
         """
         if dataset not in PROCESSED_SCHEMAS:
             raise KeyError(f"unknown processed dataset {dataset!r}")
-        df = validate(df, dataset)
         folder = F.create_map(
             *[x for m in MARKETS for x in (F.lit(m.id), F.lit(m.folder))]
         )[F.col("id_mercado").cast("int")]
-        df = (
-            df.withColumn("mercado", folder)
-            .withColumn("year", F.year("datetime_utc"))
-            .withColumn("month", F.month("datetime_utc"))
+        df = validate(df, dataset).select(
+            "*",
+            folder.alias("mercado"),
+            F.year("datetime_utc").alias("year"),
+            F.month("datetime_utc").alias("month"),
         )
-
-        path = self.processed_path(dataset)
-        seq = 0
-        existing = None
-        if self._exists(path):
-            # the one evaluation of the incoming transform: the
-            # partition probe and the merge both read this checkpoint
-            df = df.localCheckpoint(eager=True)
-            touched = df.select(*_PARTITION_COLS).distinct().collect()
-            leaves = [d for d in (_leaf_dir(path, r) for r in touched) if os.path.isdir(d)]
-            if leaves:
-                existing = (
-                    self.spark.read.schema(stored_schema(dataset))
-                    .option("basePath", path)
-                    .parquet(*leaves)
-                )
-                top = existing.agg(F.max("_ingest_seq")).first()[0]
-                seq = (top if top is not None else -1) + 1
-        merged = df.withColumn("_ingest_seq", F.lit(seq).cast("long"))
-        if existing is not None:
-            merged = existing.unionByName(merged)
-
         keys = DEDUP_KEYS.get(dataset)
-        if keys:
-            w = W.partitionBy(*keys).orderBy(F.desc("_ingest_seq"))
-            merged = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if existing is not None:
-            # the plan both reads and dynamically overwrites the touched
-            # leaves; materialize the merged batch first so the commit
-            # can never race its own scan. Bounded: only those leaves.
-            merged = merged.localCheckpoint(eager=True)
-        self._dyn_overwrite(
-            merged.sortWithinPartitions("datetime_utc"), path, _PARTITION_COLS
+
+        def keep_last(merged: DataFrame) -> DataFrame:
+            if keys:
+                w = W.partitionBy(*keys).orderBy(F.desc("_ingest_seq"))
+                merged = (
+                    merged.withColumn("_rn", F.row_number().over(w))
+                    .where(F.col("_rn") == 1)
+                    .drop("_rn")
+                )
+            return merged.sortWithinPartitions("datetime_utc")
+
+        self._merge_write(
+            df, self.processed_path(dataset), _PARTITION_COLS, stored_schema(dataset), keep_last
         )
+
+    # ------------------------------------------------------------------
+
+    def _merge_write(
+        self,
+        batch: DataFrame,
+        path: str,
+        partition_cols: list[str],
+        schema: T.StructType,
+        resolve: Callable[[DataFrame], DataFrame],
+    ) -> None:
+        """The one merge-write pass of both zones: rewrite the leaves
+        ``batch`` touches with ``resolve(existing rows ∪ batch)``.
+
+        When the dataset exists, ``batch`` is checkpointed once, and
+        that job also reports its distinct ``partition_cols`` tuples
+        through an observed ``collect_set`` (at most
+        ``MAX_TOUCHED_LEAVES``, else ``RuntimeError``). The existing
+        rows are read from exactly the touched leaf directories, by
+        path under ``basePath``, with ``schema``. If ``schema`` has
+        ``_ingest_seq``, the batch is stamped with one batch-global
+        sequence: one more than the largest ``_ingest_seq`` the touched
+        files' footer statistics record (0 when nothing is touched).
+
+        The merged rows are not checkpointed before the overwrite. A
+        dynamic partition overwrite writes every task's files under a
+        staging directory and replaces the touched leaves only when the
+        job commits, after every task, the ones scanning those leaves
+        included, has finished. The scan cannot see a half-replaced
+        leaf, so a merged checkpoint would add two jobs and protect
+        nothing. (A static overwrite deletes its target before the job
+        runs; over its own input it fails on the deleted files and
+        leaves the table empty. ``_dyn_overwrite`` is always dynamic.)
+        """
+        existing = None
+        seq = 0
+        if self._exists(path):
+            probe = Observation()
+            tuples = F.collect_set(F.struct(*partition_cols))
+            batch = batch.observe(
+                probe, F.slice(tuples, 1, MAX_TOUCHED_LEAVES + 1).alias("touched")
+            ).localCheckpoint(eager=True)
+            touched = probe.get["touched"]
+            if len(touched) > MAX_TOUCHED_LEAVES:
+                raise RuntimeError(
+                    f"{path}: batch touches more than {MAX_TOUCHED_LEAVES} leaf partitions"
+                )
+            leaves = [
+                d for d in (_leaf_dir(path, partition_cols, t) for t in touched) if os.path.isdir(d)
+            ]
+            if leaves:
+                top = _footer_max_seq(leaves, schema)
+                seq = 0 if top is None else top + 1
+                existing = (
+                    self.spark.read.schema(schema).option("basePath", path).parquet(*leaves)
+                )
+        if "_ingest_seq" in schema.names:
+            batch = batch.withColumn("_ingest_seq", F.lit(seq).cast("long"))
+        merged = batch if existing is None else existing.unionByName(batch)
+        self._dyn_overwrite(resolve(merged), path, partition_cols)
 
     def read_processed(
         self,

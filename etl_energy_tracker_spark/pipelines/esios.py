@@ -34,9 +34,9 @@ def map_market_id(df: DataFrame, spark: SparkSession) -> DataFrame:
     geo filter the way the reference raises (a lazy raise_error guard
     would also work; the inner join keeps the plan total)."""
     dim = indicator_map_df(spark)
-    return df.withColumn("_ind", F.col("indicador_id").cast("int")).join(
-        F.broadcast(dim), F.col("_ind") == dim.indicador_id, "inner"
-    ).drop("_ind", "indicador_id")
+    return df.join(
+        F.broadcast(dim), df.indicador_id.cast("int") == dim.indicador_id, "inner"
+    ).drop("indicador_id")
 
 
 def transform_price_data(spark: SparkSession, raw: DataFrame) -> DataFrame:

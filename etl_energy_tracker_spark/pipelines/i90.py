@@ -39,14 +39,12 @@ def apply_market_filters(df: DataFrame, market_id: int) -> DataFrame:
 
 def finalize_columns(df: DataFrame, market_id: int, value_col: str) -> DataFrame:
     """P2 (_procesador_i90.py:211-233): rename to canonical names, keep
-    tipo_transaccion when present."""
-    for old, new in RENAMES.items():
-        if old in df.columns:
-            df = df.withColumnRenamed(old, new)
-    df = df.withColumn("id_mercado", F.lit(market_id))
-    cols = ["datetime_utc", "up", value_col, "id_mercado"]
-    if "tipo_transaccion" in df.columns and value_col == "volumenes":
-        cols.append("tipo_transaccion")
+    tipo_transaccion when present. One projection."""
+    source = {RENAMES.get(c, c): c for c in df.columns}
+    cols = [F.col(source.get(n, n)).alias(n) for n in ("datetime_utc", "up", value_col)]
+    cols.append(F.lit(market_id).alias("id_mercado"))
+    if "tipo_transaccion" in source and value_col == "volumenes":
+        cols.append(F.col(source["tipo_transaccion"]).alias("tipo_transaccion"))
     return df.select(*cols)
 
 

@@ -5,6 +5,14 @@ point (tests, bench, driver harness) runs with the same plan-shaping
 settings: AQE on, UTC session time zone, Arrow enabled, shuffle
 partitions sized to the local core count rather than the 200 default.
 
+DataFrame debugging is off (``spark.python.sql.dataFrameDebugging``):
+with it on, every ``Column`` operation pays about four py4j round trips
+(active-session lookup, conf read, origin set, stack walk) to record
+its Python call site, which dominates the driver-side cost of building
+a pipeline's long expression chains. The trade: analysis errors no
+longer carry a DataFrame query context pointing at the Python line;
+their error classes and messages are unchanged.
+
 At cluster scale the same builder applies — only master/memory change;
 the semantic configs (timezone, AQE, partition-overwrite mode) are the
 contract the engine relies on.
@@ -60,6 +68,9 @@ def get_spark(
         # (processed_file_utils.py:352).
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        # no DataFrame error contexts: each Column operation would make
+        # ~4 extra py4j round trips to record its Python call site
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

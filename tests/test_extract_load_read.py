@@ -3,6 +3,8 @@ dicts, job entry points, readers, and the NL→SQL surface."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,6 +107,62 @@ def test_loader_status_and_job(spark, tmp_path):
         pr.read(mercado_ids=[99])
     assert "precios" in register_lake_tables(spark, lake)
     assert spark.sql("SELECT count(*) FROM precios").first()[0] == 4
+
+
+def _upserts(lake, monkeypatch) -> list[str]:
+    calls = []
+    real = lake.upsert_processed
+
+    def counted(df, dataset):
+        calls.append(dataset)
+        return real(df, dataset)
+
+    monkeypatch.setattr(lake, "upsert_processed", counted)
+    return calls
+
+
+def _i90(spark, mid, up):
+    return spark.createDataFrame(
+        [(dt.datetime(2024, 1, 15, 10), up, 1.0, mid)],
+        "datetime_utc timestamp, up string, volumenes double, id_mercado int",
+    )
+
+
+def test_loader_one_upsert_per_call(spark, tmp_path, monkeypatch):
+    lake = Lake(spark, str(tmp_path / "lake"))
+    calls = _upserts(lake, monkeypatch)
+    st = DataLakeLoader(lake).load_transformed_data(
+        {2: _i90(spark, 2, "A"), 3: _i90(spark, 3, "B")}, "volumenes_i90"
+    )
+    assert st["success"] and st["details"]["markets_processed"] == [2, 3]
+    assert calls == ["volumenes_i90"]
+    got = lake.read_processed("volumenes_i90").select("id_mercado", "up").collect()
+    assert sorted(tuple(r) for r in got) == [(2, "A"), (3, "B")]
+
+
+def test_loader_validation_failure_is_per_market(spark, tmp_path):
+    lake = Lake(spark, str(tmp_path / "lake"))
+    st = DataLakeLoader(lake).load_transformed_data(
+        {9: _i90(spark, 9, "A"), 15: _i90(spark, 15, "B").drop("up")}, "volumenes_i90"
+    )
+    assert st["success"] is False
+    assert st["details"]["markets_processed"] == [9]
+    assert list(st["details"]["markets_failed"]) == [15]
+    got = lake.read_processed("volumenes_i90").select("id_mercado").collect()
+    assert [r[0] for r in got] == [9]
+
+
+def test_loader_upsert_failure_fails_every_market(spark, tmp_path):
+    lake = Lake(spark, str(tmp_path / "lake"))
+    boom = _i90(spark, 3, "B").withColumn(
+        "volumenes", F.raise_error(F.lit("bad volume")).cast("double")
+    )
+    st = DataLakeLoader(lake).load_transformed_data(
+        {2: _i90(spark, 2, "A"), 3: boom}, "volumenes_i90"
+    )
+    assert st["success"] is False
+    assert st["details"]["markets_processed"] == []
+    assert sorted(st["details"]["markets_failed"]) == [2, 3]
 
 
 def test_nl2sql_surface(spark):

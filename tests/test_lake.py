@@ -5,10 +5,15 @@ survive; reader prunes by date/market."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from etl_energy_tracker_spark import lake as lake_mod
 from etl_energy_tracker_spark.lake import Lake, stored_schema
 from etl_energy_tracker_spark.schemas import PROCESSED_SCHEMAS
 
@@ -27,6 +32,19 @@ def lake(spark, tmp_path):
 T0 = dt.datetime(2024, 1, 15, 10)
 T1 = dt.datetime(2024, 1, 15, 11)
 T2 = dt.datetime(2024, 2, 2, 9)
+
+
+def spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc, group = spark.sparkContext, f"count-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_upsert_keep_last(spark, lake):
@@ -127,10 +145,17 @@ def test_merging_upsert_evaluates_input_once(spark, lake):
 
 
 def _leaf_bytes(root, leaf):
-    import os
-
     d = os.path.join(root, leaf)
     return {f: open(os.path.join(d, f), "rb").read() for f in sorted(os.listdir(d))}
+
+
+def _seqs(lake):
+    return {
+        (r["datetime_utc"], r["precio"], r["_ingest_seq"])
+        for r in lake.read_processed(
+            "precios", columns=["datetime_utc", "precio", "_ingest_seq"]
+        ).collect()
+    }
 
 
 def test_upsert_existing_and_new_leaf(spark, lake):
@@ -145,13 +170,7 @@ def test_upsert_existing_and_new_leaf(spark, lake):
     feb_before = _leaf_bytes(root, feb)
 
     lake.upsert_processed(_precios(spark, [(T0, 1, 50.0), (T3, 1, 80.0)]), "precios")
-    got = {
-        (r["datetime_utc"], r["precio"], r["_ingest_seq"])
-        for r in lake.read_processed(
-            "precios", columns=["datetime_utc", "precio", "_ingest_seq"]
-        ).collect()
-    }
-    assert got == {(T0, 50.0, 2), (T1, 60.0, 0), (T2, 70.0, 0), (T3, 80.0, 2)}
+    assert _seqs(lake) == {(T0, 50.0, 2), (T1, 60.0, 0), (T2, 70.0, 0), (T3, 80.0, 2)}
     assert _leaf_bytes(root, feb) == feb_before
 
 
@@ -163,6 +182,55 @@ def test_upsert_merges_null_partition_leaf(spark, lake):
     lake.upsert_processed(_precios(spark, [(T1, 99, 60.0)]), "precios")
     got = lake.read_processed("precios").collect()
     assert {(r["mercado"], r["precio"]) for r in got} == {(None, 50.0), (None, 60.0)}
+
+
+def test_merging_upsert_job_count(spark, lake):
+    """A merging upsert runs the batch checkpoint (which also probes the
+    touched leaves) and the write: no distinct collect, no aggregate
+    for the next _ingest_seq, no schema inference."""
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0), (T2, 1, 70.0)]), "precios")
+    batch = _precios(spark, [(T0, 1, 50.0), (T1, 1, 60.0)])
+    assert spark_jobs(spark, lambda: lake.upsert_processed(batch, "precios")) <= 4
+    assert lake.read_processed("precios").count() == 3
+
+
+def test_next_seq_is_global_over_touched_footers(spark, lake):
+    """January holds seq 3, February seq 1: a batch touching both
+    stamps 4 in both, and keep-last holds."""
+    for _ in range(4):
+        lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+    lake.upsert_processed(_precios(spark, [(T2, 1, 70.0)]), "precios")
+    lake.upsert_processed(_precios(spark, [(T2, 1, 70.0)]), "precios")
+    assert _seqs(lake) == {(T0, 50.0, 3), (T2, 70.0, 1)}
+
+    lake.upsert_processed(
+        _precios(spark, [(T0, 1, 50.0), (T1, 1, 60.0), (T2, 1, 70.0)]), "precios"
+    )
+    assert _seqs(lake) == {(T0, 50.0, 4), (T1, 60.0, 4), (T2, 70.0, 4)}
+
+
+def test_touched_file_without_seq_statistics_raises(spark, lake):
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+    leaf = os.path.join(lake.processed_path("precios"), "mercado=diario/id_mercado=1/year=2024/month=1")
+    bare = os.path.join(leaf, "no-stats.parquet")
+    pq.write_table(
+        pa.table({
+            "datetime_utc": pa.array([T1], pa.timestamp("us")),
+            "precio": pa.array([60.0], pa.float32()),
+            "_ingest_seq": pa.array([0], pa.int64()),
+        }),
+        bare,
+        write_statistics=False,
+    )
+    with pytest.raises(RuntimeError, match="no-stats.parquet"):
+        lake.upsert_processed(_precios(spark, [(T0, 1, 51.0)]), "precios")
+
+
+def test_touched_leaf_bound_raises(spark, lake, monkeypatch):
+    lake.upsert_processed(_precios(spark, [(T0, 1, 50.0)]), "precios")
+    monkeypatch.setattr(lake_mod, "MAX_TOUCHED_LEAVES", 1)
+    with pytest.raises(RuntimeError, match="more than 1 leaf"):
+        lake.upsert_processed(_precios(spark, [(T0, 1, 50.0), (T2, 1, 70.0)]), "precios")
 
 
 def test_read_unwritten_dataset_raises(spark, lake):
@@ -184,6 +252,52 @@ def test_raw_append_dedup(spark, lake):
     lake.write_raw(df, "diario", "volumenes_i90")
     lake.write_raw(df, "diario", "volumenes_i90")  # exact re-ingest dedups
     assert lake.read_raw("diario", "volumenes_i90").count() == 1
+
+
+def _raw(spark, rows):
+    return spark.createDataFrame(
+        rows, "fecha string, hora string, volumenes double, year int, month int"
+    )
+
+
+def test_raw_redelivery_merges_touched_month_only(spark, lake):
+    """A re-delivery into an existing month merges with its rows and
+    dedups exact repeats; other months' files stay byte for byte."""
+    lake.write_raw(
+        _raw(spark, [("2024-01-15", "1", 10.0, 2024, 1), ("2024-02-02", "1", 20.0, 2024, 2)]),
+        "diario",
+        "volumenes_i90",
+    )
+    root = lake.raw_path("diario", "volumenes_i90")
+    feb_before = _leaf_bytes(root, "year=2024/month=2")
+    lake.write_raw(
+        _raw(spark, [("2024-01-15", "1", 10.0, 2024, 1), ("2024-01-16", "2", 11.0, 2024, 1)]),
+        "diario",
+        "volumenes_i90",
+    )
+    got = sorted(tuple(r) for r in lake.read_raw("diario", "volumenes_i90").select(
+        "fecha", "hora", "volumenes", "month").collect())
+    assert got == [
+        ("2024-01-15", "1", 10.0, 1), ("2024-01-16", "2", 11.0, 1), ("2024-02-02", "1", 20.0, 2)
+    ]
+    assert _leaf_bytes(root, "year=2024/month=2") == feb_before
+
+
+def test_raw_merge_refuses_to_drop_stored_columns(spark, lake):
+    """Existing rows read back with the batch's schema; a touched file
+    holding a column the batch lacks would lose it in the rewrite."""
+    lake.write_raw(_raw(spark, [("2024-01-15", "1", 10.0, 2024, 1)]), "diario", "v")
+    narrower = _raw(spark, [("2024-01-16", "1", 1.0, 2024, 1)]).drop("hora")
+    with pytest.raises(RuntimeError, match=r"month=1/.*\['hora'\]"):
+        lake.write_raw(narrower, "diario", "v")
+    assert lake.read_raw("diario", "v").count() == 1
+
+
+def test_merging_write_raw_job_count(spark, lake):
+    lake.write_raw(_raw(spark, [("2024-01-15", "1", 10.0, 2024, 1)]), "diario", "v")
+    batch = _raw(spark, [("2024-01-15", "1", 10.0, 2024, 1), ("2024-01-16", "1", 1.0, 2024, 1)])
+    assert spark_jobs(spark, lambda: lake.write_raw(batch, "diario", "v")) <= 3
+    assert lake.read_raw("diario", "v").count() == 2
 
 
 def test_writes_leave_session_overwrite_mode(spark, lake):
@@ -213,13 +327,11 @@ def test_writes_leave_session_overwrite_mode(spark, lake):
 
 
 def _leaf_file_counts(root):
-    import os
-
     counts = {}
     for dirpath, _dirs, files in os.walk(root):
-        pq = [f for f in files if f.endswith(".parquet")]
-        if pq:
-            counts[os.path.relpath(dirpath, root)] = len(pq)
+        parquet = [f for f in files if f.endswith(".parquet")]
+        if parquet:
+            counts[os.path.relpath(dirpath, root)] = len(parquet)
     return counts
 
 
@@ -227,7 +339,6 @@ def _fragment_leaf(root, leaf, copies=2):
     """Simulate the small files a multi-task append run leaves behind by
     duplicating the leaf's parquet file."""
     import glob
-    import os
     import shutil
 
     src = glob.glob(os.path.join(root, leaf, "*.parquet"))[0]
