@@ -72,11 +72,6 @@ def with_shingles(
     return df.withColumn(out, F.expr(expr)).drop("_toks")
 
 
-def _shingle_hash_expr(arr: str) -> str:
-    # polynomial hash of each shingle, computed once per shingle
-    return f"transform({arr}, s -> {spark_charhash('s')})"
-
-
 def with_minhash_signature(
     df: DataFrame, shingle_col: str = "shingles", k: int = 16, out: str = "signature"
 ) -> DataFrame:

@@ -822,6 +822,7 @@ _LV_CONTRIB = (
 )
 def louvain_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
+    from ..session import shuffle_width
 
     li = (
         load_table(spark, "lineitem", sf_dir)
@@ -876,15 +877,11 @@ def louvain_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny (<= one node per part), so the per-round floor is task
     # overhead: scope the shuffle width down for the CC phase (the
     # streaming-drive convention).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         comp = dedup.connected_components(
             choice, "i", "j", algorithm="star"
         ).select("node", F.col("component").alias("community_id"))
         comp = comp.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     singles = deg.join(
         comp, deg.i == comp.node, "left_anti"
     ).select(F.col("i").alias("node"), F.col("i").alias("community_id"))

@@ -773,11 +773,6 @@ def _bj_pos_duck_o(i: int) -> str:
     return f"(({key} * {2 * i + 3} + {101 * (i + 1)}) % {_BJ_M})"
 
 
-def _bj_pos_spark(i: int) -> str:
-    key = spark_charhash("CAST(l_orderkey AS STRING)")
-    return f"(({key} * {2 * i + 3} + {101 * (i + 1)}) % {_BJ_M})"
-
-
 def _bj_pos_spark_o(i: int) -> str:
     key = spark_charhash("CAST(o_orderkey AS STRING)")
     return f"(({key} * {2 * i + 3} + {101 * (i + 1)}) % {_BJ_M})"

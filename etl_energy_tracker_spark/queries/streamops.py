@@ -286,9 +286,10 @@ def stream_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the bounded source, so the plain range join is the oracle.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import clicks_purchases_join_stream
+    from ..streaming.jobs import clicks_purchases, drive, events_stream
 
-    return clicks_purchases_join_stream(spark, sf_dir)
+    events = events_stream(spark, sf_dir)
+    return drive(clicks_purchases(events, "inner", "1 hour", "1 hour"), "append")
 
 
 @register(
@@ -742,9 +743,10 @@ def stream_session_window_append(
 def stream_stream_left_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..streaming.jobs import clicks_purchases_left_outer_stream
+    from ..streaming.jobs import clicks_purchases, drive, events_stream
 
-    return clicks_purchases_left_outer_stream(spark, sf_dir)
+    events = events_stream(spark, sf_dir)
+    return drive(clicks_purchases(events, "left_outer", "1 hour", "1 hour"), "append")
 
 
 @register(
@@ -890,9 +892,10 @@ def stream_dedup_within_watermark(
     "/ full-outer join family).",
 )
 def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import clicks_purchases_full_outer_stream
+    from ..streaming.jobs import clicks_purchases, drive, events_stream
 
-    return clicks_purchases_full_outer_stream(spark, sf_dir)
+    events = events_stream(spark, sf_dir)
+    return drive(clicks_purchases(events, "full_outer", "1 hour", "1 hour"), "append")
 
 
 @register(
@@ -954,9 +957,12 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "upgrade.",
 )
 def stream_full_outer_asym_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.jobs import clicks_purchases_full_outer_asym_stream
+    from ..streaming.jobs import clicks_purchases, drive, events_stream
 
-    return clicks_purchases_full_outer_asym_stream(spark, sf_dir)
+    events = events_stream(spark, sf_dir)
+    return drive(
+        clicks_purchases(events, "full_outer", "2 hours", "30 minutes"), "append"
+    )
 
 
 @register(

@@ -21,7 +21,8 @@ contract the engine relies on.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Iterator, Sequence
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -78,6 +79,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def shuffle_width(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``,
+    then restore the earlier value, also when the block raises. For
+    small bounded phases (a stream drive, a CC pass over a tiny graph)
+    whose cost floor is per-partition overhead, not data."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:

@@ -5,25 +5,43 @@ upgrade is incremental processing of the raw zone with
 Trigger.AvailableNow — same semantics as the batch pipelines (the
 transforms are shared functions), but new files are picked up
 automatically with checkpointed exactly-once progress, and the lake
-upsert runs per micro-batch via foreachBatch.
+upsert runs per micro-batch via foreachBatch
+(``incremental_upsert_stream``, the production path, which keeps its
+own checkpointed drive).
 
-``hourly_event_agg_stream`` is the windowed-aggregation path: watermark
-+ tumbling window, driven to completion synchronously with
-processAllAvailable for tests/oracle comparison.
+Every other job is bounded: it builds an ordinary streaming DataFrame
+over the events table and hands it to ``drive`` with its output mode.
+The drive owns the rest — memory sink, the ``DRIVE_SHUFFLE_PARTITIONS``
+shuffle width, trigger and wait, the plan capture for the plan tripwire
+(``last_stream_plan``), the stop, and reading the sink back as a table.
+Trigger rule: the ``applyInPandasWithState`` jobs without a state
+timeout pass ``available_now=True`` (Trigger.AvailableNow, wait for
+termination); every job whose output waits on the watermark — windows,
+joins, dedup, the event-time timeout — and the complete-mode drives
+keep the default trigger and ``processAllAvailable``.
+
+``clicks_purchases`` is the one clicks x purchases stream-stream join
+(inner, left outer, full outer), returned un-driven; its docstring holds
+the pinned eviction rules.
 """
 
 from __future__ import annotations
 
+import math
 import threading
 import uuid
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..lake import Lake
+from ..session import shuffle_width
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table as a file stream.
 
     Shares batch ``load_table``'s both-encodings timestamp contract
@@ -60,7 +78,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Last-driven streaming query's physical plan, captured for the plan
 # tripwire (tools/plan_audit.py): streaming plans live in the
 # streaming runtime, not the returned memory-sink DataFrame, so the
-# drive path records explainInternal() before stopping the query. Held
+# drive records explainInternal() before stopping the query. Held
 # per thread, not in a module-level list: catalog fingerprints hash
 # module globals as constants, so runtime state must not live in one.
 _LAST_STREAM_PLAN = threading.local()
@@ -70,40 +88,52 @@ def last_stream_plan() -> str | None:
     return getattr(_LAST_STREAM_PLAN, "plan", None)
 
 
-def _finish(q, wait: str = "processAll") -> None:
-    """Drive a streaming query to completion, capture its executed
-    physical plan for the tripwire, then stop it."""
-    try:
-        if wait == "await":
-            q.awaitTermination()
-        else:
-            q.processAllAvailable()
+def clear_stream_plan() -> None:
+    _LAST_STREAM_PLAN.plan = None
+
+
+# Bounded drives don't need the session's full shuffle width: every
+# extra shuffle partition is another state-store instance to create,
+# snapshot and commit per micro-batch, which dominates runtime on
+# small backlogs.
+DRIVE_SHUFFLE_PARTITIONS = 8
+
+
+def drive(df: DataFrame, mode: str, available_now: bool = False) -> DataFrame:
+    """Run the bounded streaming query ``df`` to completion into a
+    memory sink in output ``mode`` and return the sink as a table.
+
+    ``available_now`` starts it with Trigger.AvailableNow and waits for
+    termination; otherwise the default trigger runs until
+    processAllAvailable returns. The executed physical plan is captured
+    for ``last_stream_plan`` before the stop. The query is stopped and
+    the session's shuffle width restored also when the query fails."""
+    spark = df.sparkSession
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    with shuffle_width(spark, DRIVE_SHUFFLE_PARTITIONS):
+        q = (writer.trigger(availableNow=True) if available_now else writer).start()
         try:
+            if available_now:
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
             _LAST_STREAM_PLAN.plan = q._jsq.explainInternal(False)
-        except Exception:
-            _LAST_STREAM_PLAN.plan = None
-    finally:
-        q.stop()
+        finally:
+            q.stop()
+    return spark.table(name)
 
 
-class _scoped_shuffle_partitions:
-    """Bounded stream drives don't need the session's full shuffle
-    width — every extra shuffle partition is another state-store
-    instance to create, snapshot, and commit per micro-batch, which
-    dominates runtime on small backlogs. Production (unbounded) jobs
-    pass ``None`` and keep the session setting."""
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+def _final_rows(df: DataFrame, *progress: str) -> DataFrame:
+    """Update mode emits a user's row once per micro-batch that touched
+    it; keep the final one, which is furthest along the ``progress``
+    columns (each only grows)."""
+    w = W.partitionBy("user_id").orderBy(*(F.desc(c) for c in progress))
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def hourly_event_agg_stream(
@@ -111,7 +141,6 @@ def hourly_event_agg_stream(
     sf_dir: str,
     watermark: str = "2 hours",
     output_mode: str = "append",
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Tumbling 1-hour window aggregation over the events table read as
     a stream; returns the emitted rows as a DataFrame.
@@ -124,9 +153,9 @@ def hourly_event_agg_stream(
     synchronous oracle drive over a bounded source, where the final
     in-progress windows (still inside the watermark) must be visible
     for the batch-equivalence check."""
-    stream = _events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -139,16 +168,7 @@ def hourly_event_agg_stream(
             "sum_value",
         )
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(agg, output_mode)
 
 
 def incremental_upsert_stream(
@@ -181,9 +201,7 @@ def incremental_upsert_stream(
     q.awaitTermination()
 
 
-def stateful_user_totals_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def stateful_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user running totals kept in explicit GroupState across
     micro-batches (the applyInPandasWithState slot the reference's
@@ -193,12 +211,6 @@ def stateful_user_totals_stream(
     Driven with availableNow + update-mode memory sink; over a static
     source this is batch-equivalent, so the batch aggregate is its
     oracle."""
-    import uuid
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir)
 
     def update(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0)
@@ -211,38 +223,17 @@ def stateful_user_totals_stream(
             {"user_id": [key[0]], "n_events": [n], "sum_value": [total / 100.0]}
         )
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = events_stream(spark, sf_dir).groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType="user_id long, n_events long, sum_value double",
         stateStructType="n long, total long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    # update mode appends one row per (user, batch); keep the final state
-    from pyspark.sql import Window as W
-
-    res = spark.table(name)
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _final_rows(drive(out, "update", available_now=True), "n_events")
 
 
-def scd1_upsert_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def scd1_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD-type-1 dimension maintenance: per-key keep-last
     upsert held in explicit GroupState across micro-batches — the
     continuously-maintained current-values table every warehouse keeps
@@ -253,10 +244,7 @@ def scd1_upsert_stream(
 
     Driven with availableNow + update-mode memory sink; over a static
     source the final state equals the batch keep-last — the oracle."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir).select(
+    stream = events_stream(spark, sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
@@ -297,147 +285,83 @@ def scd1_upsert_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"scd1_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    # update mode appends one row per (user, batch); keep the final state
-    from pyspark.sql import Window as W
-
-    res = spark.table(name)
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _final_rows(drive(out, "update", available_now=True), "n_events")
 
 
-def clicks_purchases_join_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
+def clicks_purchases(
+    events: DataFrame, how: str, click_wm: str, purchase_wm: str
 ) -> DataFrame:
-    """Watermarked stream-stream inner join: each purchase matched to
-    the same user's clicks in the preceding hour.
+    """Watermarked stream-stream join of each purchase with the same
+    user's clicks in the preceding hour, returned un-driven: ``how`` is
+    ``inner``, ``left_outer`` or ``full_outer``; ``click_wm`` and
+    ``purchase_wm`` are the two sides' watermark delays. ``events`` is
+    a stream with event_id, user_id, event_type and ts; output is
+    (user_id, purchase_id, click_id, lag_us).
 
-    Both sides carry event-time watermarks and the join condition
-    bounds click_ts to a window around purchase_ts, so Spark can prove
-    when buffered rows are no longer joinable and evict them — the
-    state-cleanup contract unbounded stream-stream joins require. Over
-    the bounded test source the result is batch-equivalent, so the
-    plain two-sided range join is the oracle."""
+    Both sides carry event-time watermarks and the predicate bounds
+    click_ts to [purchase_ts - 60 min, purchase_ts], so Spark can prove
+    when a buffered row can no longer match and evict it — the
+    state-cleanup contract unbounded stream-stream joins require.
+    Matched pairs emit as found, so the matched rows over a bounded
+    source are the plain batch range join's.
 
-    def src() -> DataFrame:
-        return _events_stream(spark, sf_dir)
+    Eviction rules, pinned empirically on synthetic sources
+    (tests/test_streaming_misc.py, tests/test_round12_ops.py):
 
+    - The GLOBAL watermark is the MIN of the two sides' watermarks,
+      max(side ts) - side delay (Spark's default
+      multipleWatermarkPolicy=min). With asymmetric delays (the
+      clicks-2 h, purchases-30 min configuration of a slow batchy
+      backfill against a near-real-time feed) the shorter delay can
+      push it past a row the longer one alone would keep.
+    - A buffered unmatched row emits null-extended exactly once, and is
+      evicted, when its OWN side's join-window end falls STRICTLY below
+      the global watermark; a row whose window end equals it stays in
+      state. A purchase's window ends at purchase_ts (clicks precede
+      purchases); a click's ends at click_ts + 60 min (a purchase may
+      follow by up to an hour), so an unmatched click lingers an hour
+      longer than an unmatched purchase.
+    - A left outer join emits only the purchase side's null rows: over
+      the bounded source, every matched row plus the purchases with
+      purchase_ts < global watermark.
+
+    ``user_id`` is the purchase's, or the click's on a click-only full
+    outer row; a purchase with a NULL user_id never matches, so for the
+    inner and left joins it is the purchase's."""
     clicks = (
-        src()
-        .where(F.col("event_type") == "click")
+        events.where(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", "1 hour")
+        .withWatermark("click_ts", click_wm)
     )
     purchases = (
-        src()
-        .where(F.col("event_type") == "purchase")
+        events.where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             "user_id",
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", "1 hour")
+        .withWatermark("purchase_ts", purchase_wm)
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         F.expr(
             "c_user = user_id AND click_ts >= purchase_ts - INTERVAL 60 MINUTES "
             "AND click_ts <= purchase_ts"
         ),
+        how,
     ).select(
-        "user_id",
+        F.coalesce(F.col("user_id"), F.col("c_user")).alias("user_id"),
         "purchase_id",
         "click_id",
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        _finish(q)
-    return spark.table(name)
 
 
-def clicks_purchases_left_outer_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join — the eviction proof
-    the inner join cannot give: a purchase with no click in its
-    preceding hour is buffered until the GLOBAL watermark (the MIN of
-    both sides' event-time watermarks) passes its join window, then
-    emitted exactly once with NULL click columns and evicted.
-    Emission is STRICT: a purchase whose ts equals the global
-    watermark stays in state (pinned empirically — the synthetic
-    boundary test emitted nothing at equality, only strictly-older
-    rows). Matched pairs emit as found, identical to the inner join.
-    Over the bounded source the emitted set is therefore the batch
-    left join restricted to: all matched rows, plus null rows whose
-    purchase_ts < min(max click ts, max purchase ts) - 1h."""
-
-    def src() -> DataFrame:
-        return _events_stream(spark, sf_dir)
-
-    clicks = (
-        src()
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        src()
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND click_ts >= purchase_ts - INTERVAL 60 MINUTES "
-            "AND click_ts <= purchase_ts"
-        ),
-        "left_outer",
-    ).select(
-        "user_id",
-        "purchase_id",
-        "click_id",
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        _finish(q)
-    return spark.table(name)
-
-
-def dedup_events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
+def dedup_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication with bounded state
     (dropDuplicatesWithinWatermark): the events stream is unioned with
     itself so every event arrives twice, then deduplicated on event_id.
@@ -448,151 +372,16 @@ def dedup_events_stream(
     once sources (e.g. re-downloaded ESIOS/OMIE files) where duplicates
     arrive close together in event time. Driven to completion over the
     bounded source, the result must equal batch DISTINCT."""
-
-    def src() -> DataFrame:
-        return _events_stream(spark, sf_dir)
-
-    doubled = src().unionByName(src())
+    doubled = events_stream(spark, sf_dir).unionByName(events_stream(spark, sf_dir))
     deduped = (
         doubled.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(deduped, "append")
 
 
-def clicks_purchases_full_outer_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
-    """Watermarked stream-stream FULL OUTER join. Null-row emission
-    follows ONE uniform rule, pinned empirically for both sides: a
-    buffered row emits null-extended when its OWN side's join-window
-    END falls STRICTLY below the GLOBAL watermark (min of both
-    sides). The left (purchase) window ends at purchase_ts (clicks
-    must precede purchases); the right (click) window ends at
-    click_ts + 60 min (a purchase may follow a click by up to an
-    hour) — so unmatched clicks linger an hour longer than unmatched
-    purchases before their null row appears. Matched pairs emit as
-    found."""
-
-    def src() -> DataFrame:
-        return _events_stream(spark, sf_dir)
-
-    clicks = (
-        src()
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        src()
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND click_ts >= purchase_ts - INTERVAL 60 MINUTES "
-            "AND click_ts <= purchase_ts"
-        ),
-        "full_outer",
-    ).select(
-        F.coalesce(F.col("user_id"), F.col("c_user")).alias("user_id"),
-        "purchase_id",
-        "click_id",
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        _finish(q)
-    return spark.table(name)
-
-
-def clicks_purchases_full_outer_asym_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    click_delay: str = "2 hours",
-    purchase_delay: str = "30 minutes",
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
-    """Full-outer stream-stream join with ASYMMETRIC per-side
-    watermark delays (VERDICT r10 task 7's named missing shape): the
-    click side tolerates 2 hours of lateness, the purchase side 30
-    minutes — the realistic configuration when one feed is a slow
-    batchy backfill and the other near-real-time. Spark's default
-    multipleWatermarkPolicy=min makes the GLOBAL watermark
-    min(max(click_ts) - 2h, max(purchase_ts) - 30min), and the r10
-    eviction rule carries over unchanged: a buffered row emits
-    null-extended when its OWN side's join-window end falls STRICTLY
-    below that global watermark. Same join predicate and output shape
-    as clicks_purchases_full_outer_stream, so the two ops isolate
-    exactly one variable — the per-side delays."""
-
-    def src() -> DataFrame:
-        return _events_stream(spark, sf_dir)
-
-    clicks = (
-        src()
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", click_delay)
-    )
-    purchases = (
-        src()
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", purchase_delay)
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id AND click_ts >= purchase_ts - INTERVAL 60 MINUTES "
-            "AND click_ts <= purchase_ts"
-        ),
-        "full_outer",
-    ).select(
-        F.coalesce(F.col("user_id"), F.col("c_user")).alias("user_id"),
-        "purchase_id",
-        "click_id",
-        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-    )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-        _finish(q)
-    return spark.table(name)
-
-
-def dedup_within_watermark_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def dedup_within_watermark_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark on event_id: per-key dedup state
     lives only inside the 2h watermark horizon, then evicts — the
     bounded-state production form of dedup_events_stream.
@@ -608,27 +397,16 @@ def dedup_within_watermark_stream(
     BATCH-side over the emitted memory table, after the stream stops.
     The shipped source has unique ids; the synthetic pytest proves the
     within-vs-past-horizon duplicate semantics."""
-    stream = _events_stream(spark, sf_dir)
     deduped = (
-        stream.withWatermark("ts", "2 hours")
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "ts")
     )
-    name = f"ddw_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(deduped, "append")
 
 
-def funnel_stage_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def funnel_stage_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming funnel (view -> click -> purchase) via
     applyInPandasWithState: per-user GroupState holds the three stage
     timestamps (micros, -1 = not reached) and each micro-batch advances
@@ -643,13 +421,7 @@ def funnel_stage_stream(
     (single bounded backlog). Over the static source the final state
     equals the batch funnel — the oracle.
     """
-    import uuid as _uuid
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir)
-    ev = stream.select(
+    ev = events_stream(spark, sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
@@ -688,44 +460,23 @@ def funnel_stage_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"funnel_out_{_uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    # update mode emits one row per (user, batch); the furthest-
-    # advanced state row is the final one (stages only move forward)
-    from pyspark.sql import Window as W
-
-    res = spark.table(name)
-    w = W.partitionBy("user_id").orderBy(
-        F.desc("ts_purchase_us"), F.desc("ts_click_us"), F.desc("ts_view_us")
-    )
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where((F.col("_rn") == 1) & (F.col("ts_view_us") != -1))
-        .drop("_rn")
-        .select(
-            "user_id",
-            "ts_view_us",
-            "ts_click_us",
-            "ts_purchase_us",
-            F.when(F.col("ts_purchase_us") != -1, "purchase")
-            .when(F.col("ts_click_us") != -1, "click")
-            .otherwise("view")
-            .alias("stage"),
-        )
+    # stages only move forward: the furthest-advanced row is the final one
+    return _final_rows(
+        drive(out, "update", available_now=True),
+        "ts_purchase_us", "ts_click_us", "ts_view_us",
+    ).where(F.col("ts_view_us") != -1).select(
+        "user_id",
+        "ts_view_us",
+        "ts_click_us",
+        "ts_purchase_us",
+        F.when(F.col("ts_purchase_us") != -1, "purchase")
+        .when(F.col("ts_click_us") != -1, "click")
+        .otherwise("view")
+        .alias("stage"),
     )
 
 
-def ewma_anomaly_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def ewma_anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EWMA anomaly detection: the stateful twin of the batch
     ``ewma_anomaly`` operator (queries/timeops.py). Per-user GroupState
     holds ONLY the last ``_EWMA_DEPTH`` values (bounded state, the
@@ -741,12 +492,6 @@ def ewma_anomaly_stream(
     DuckDB SQL doubles as this query's oracle. In continuous operation,
     late events are scored against the state as-of arrival — the
     standard streaming tradeoff, documented rather than hidden."""
-    import uuid
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..queries.timeops import (
         _EWMA_DEPTH,
         _EWMA_MIN_PRIOR,
@@ -762,8 +507,6 @@ def ewma_anomaly_stream(
                 Decimal("0.000001"), rounding=ROUND_HALF_UP
             )
         )
-
-    stream = _events_stream(spark, sf_dir)
 
     def score(key, pdfs, state: GroupState):
         tail = list(state.get[0]) if state.exists else []  # oldest first
@@ -795,7 +538,7 @@ def ewma_anomaly_stream(
         state.update((tail,))
         yield pd.DataFrame(rows)
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = events_stream(spark, sf_dir).groupBy("user_id").applyInPandasWithState(
         score,
         outputStructType=(
             "user_id long, event_id long, value double, "
@@ -805,22 +548,10 @@ def ewma_anomaly_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"ewma_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    return spark.table(name)
+    return drive(out, "append", available_now=True)
 
 
-def cusum_alarm_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def cusum_alarm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming one-sided CUSUM drift alarms: the stateful twin of the
     batch ``cusum_changepoint`` kernel, at event granularity against a
     GIVEN in-control target (classic SPC: mu0 and the alarm threshold
@@ -834,15 +565,7 @@ def cusum_alarm_stream(
     source (one availableNow batch, rows sorted (ts, event_id) per
     group) the output equals the batch closed form
     S_t = P_t - min(0, running_min(P)) — the oracle — bit for bit."""
-    import uuid
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..queries.streamops import _CUSUM_STREAM_H, _CUSUM_STREAM_MU
-
-    stream = _events_stream(spark, sf_dir)
 
     def score(key, pdfs, state: GroupState):
         s = state.get[0] if state.exists else 0
@@ -864,29 +587,17 @@ def cusum_alarm_stream(
         state.update((s,))
         yield pd.DataFrame(rows)
 
-    out = stream.groupBy("event_type").applyInPandasWithState(
+    out = events_stream(spark, sf_dir).groupBy("event_type").applyInPandasWithState(
         score,
         outputStructType="event_type string, event_id long, cusum long",
         stateStructType="s long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"cusum_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    return spark.table(name)
+    return drive(out, "append", available_now=True)
 
 
-def conformal_band_alarm_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def conformal_band_alarm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming out-of-band alarms against a BATCH-computed conformal
     band: the nightly batch job (``conformal_prediction_interval``)
     produces (median, qhat) per event type — a bounded artifact, the
@@ -901,11 +612,6 @@ def conformal_band_alarm_stream(
     partition; over the bounded test source both passes read the
     same rows, so the batch SQL (band + filter + row_number) is the
     exact oracle."""
-    import uuid
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..queries.statops import conformal_prediction_interval
 
     # bounded artifact: one (median, qhat) pair per event type
@@ -913,8 +619,6 @@ def conformal_band_alarm_stream(
         r.event_type: (int(r.median_cents), int(r.qhat_cents))
         for r in conformal_prediction_interval(spark, sf_dir).collect()
     }
-
-    stream = _events_stream(spark, sf_dir)
 
     def flag(key, pdfs, state: GroupState):
         seq = state.get[0] if state.exists else 0
@@ -928,8 +632,6 @@ def conformal_band_alarm_stream(
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values(["ts", "event_id"])
         for eid, v in zip(pdf["event_id"], pdf["value"]):
-            import math
-
             cents = math.floor(float(v) * 100)
             dev = abs(cents - med)
             if dev > qhat:
@@ -941,7 +643,7 @@ def conformal_band_alarm_stream(
         state.update((seq,))
         yield pd.DataFrame(rows)
 
-    out = stream.groupBy("event_type").applyInPandasWithState(
+    out = events_stream(spark, sf_dir).groupBy("event_type").applyInPandasWithState(
         flag,
         outputStructType=(
             "event_type string, event_id long, deviation_cents long,"
@@ -951,17 +653,7 @@ def conformal_band_alarm_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"conf_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    return spark.table(name)
+    return drive(out, "append", available_now=True)
 
 
 def session_window_agg_stream(
@@ -970,7 +662,6 @@ def session_window_agg_stream(
     gap: str = "30 minutes",
     watermark: str = "2 hours",
     output_mode: str = "complete",
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Native Structured Streaming SESSION windows: per-user session
     aggregation via ``session_window(ts, gap)`` — Spark merges events
@@ -982,9 +673,9 @@ def session_window_agg_stream(
     where the watermark closes and evicts finished sessions. The
     value sum goes through DECIMAL(38,6) so the emitted double is
     partition-order-independent (the streaming_hourly_agg recipe)."""
-    stream = _events_stream(spark, sf_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
+        events_stream(spark, sf_dir)
+        .withWatermark("ts", watermark)
         .groupBy(
             F.session_window("ts", gap), F.col("user_id")
         )
@@ -1006,16 +697,7 @@ def session_window_agg_stream(
             "sum_value",
         )
     )
-    name = f"sess_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(agg, output_mode)
 
 
 # Number of recent fixed windows retained per user in the rate
@@ -1032,7 +714,6 @@ def _make_rate_limit_update(limit: int, window_us: int):
     fixed-window rate limiter. Module-level factory so pytests can
     replay the exact decision logic directly against out-of-order
     multi-batch event sequences without a streaming drive."""
-    import pandas as pd
 
     def update(key, pdfs, state):
         if state.exists:
@@ -1080,7 +761,6 @@ def rate_limit_fixed_window_stream(
     sf_dir: str,
     limit: int = 3,
     window_us: int = 600_000_000,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Per-user fixed-window admission control (rate limiter) via
     applyInPandasWithState: each user's GroupState holds a BOUNDED
@@ -1100,19 +780,11 @@ def rate_limit_fixed_window_stream(
     batch. Over the static source the decisions equal the batch rank
     rule row_number per (user, window) <= limit — the exact SQL
     oracle."""
-    import uuid as _uuid
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir)
-    ev = stream.select(
+    ev = events_stream(spark, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
-
-    update = _make_rate_limit_update(limit, window_us)
-
     out = ev.groupBy("user_id").applyInPandasWithState(
-        update,
+        _make_rate_limit_update(limit, window_us),
         outputStructType=(
             "user_id long, n_events long, n_admitted long, "
             "n_rejected long"
@@ -1124,27 +796,8 @@ def rate_limit_fixed_window_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"rl_out_{_uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _finish(q, wait="await")
-    # update mode emits one row per (user, batch); totals only grow,
-    # so the final row is the max-n_events one
-    from pyspark.sql import Window as W
-
-    res = spark.table(name)
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("user_id", "n_events", "n_admitted", "n_rejected")
-    )
+    # totals only grow, so the final row is the max-n_events one
+    return _final_rows(drive(out, "update", available_now=True), "n_events")
 
 
 # ------------------------------- event-time TTL state timeout (r12)
@@ -1153,9 +806,7 @@ _TTL_VISIT_US = 1_800_000_000  # 30-min visit TTL (microseconds)
 _TTL_VISIT_MS = _TTL_VISIT_US // 1000
 
 
-def visit_ttl_timeout_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def visit_ttl_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user visit assembly with EVENT-TIME STATE TIMEOUT — the
     GroupStateTimeout.EventTimeTimeout surface none of the other
     stateful ops exercise: a user's open visit closes either when a
@@ -1172,14 +823,10 @@ def visit_ttl_timeout_stream(
     iff last_ms + TTL < max_ms - delay — the oracle replays exactly
     that predicate. Values accumulate as exact integer micro-units
     (seasonal_decompose_ma idiom); state per key is four longs."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = _events_stream(spark, sf_dir)
     # the watermarked column itself must survive the projection —
     # event-time timeout requires a watermarked attribute in the
     # stateful operator's child output
-    ev = stream.withWatermark("ts", "2 hours").select(
+    ev = events_stream(spark, sf_dir).withWatermark("ts", "2 hours").select(
         "ts",
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
@@ -1244,23 +891,10 @@ def visit_ttl_timeout_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    import uuid as _uuid
-
-    name = f"ttl_out_{_uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(out, "update")
 
 
-def chained_window_rollup_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = 8
-) -> DataFrame:
+def chained_window_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO chained stateful aggregations in ONE append-mode streaming
     query — the multiple-stateful-operator capability (Spark 3.4+)
     none of the other drives exercise: a 1-hour tumbling aggregate
@@ -1273,10 +907,7 @@ def chained_window_rollup_stream(
     (the stream_hourly_agg_append inclusive-boundary rule, one level
     up). Value sums cross DECIMAL(38,6) at both levels so the final
     double is partition-order-independent."""
-    import uuid as _uuid
-
-    stream = _events_stream(spark, sf_dir)
-    ev = stream.withWatermark("ts", "2 hours")
+    ev = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     h1 = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(38,6)")).alias("sv"),
@@ -1296,13 +927,4 @@ def chained_window_rollup_stream(
             "sum_value",
         )
     )
-    name = f"chain_out_{_uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            h6.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        _finish(q)
-    return spark.table(name)
+    return drive(h6, "append")

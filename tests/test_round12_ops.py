@@ -99,14 +99,16 @@ from pyspark.sql import functions as F
 def test_full_outer_asym_state_evicts_on_watermark_advance(
     spark, tmp_path
 ):
-    """Same asymmetric-delay full-outer join plan as
-    clicks_purchases_full_outer_asym_stream (clicks 2 h, purchases 30
-    min), driven over a two-batch file source. Batch 1 buffers six
+    """The asymmetric-delay full-outer join of stream_full_outer_asym_wm
+    (clicks_purchases with clicks 2 h, purchases 30 min), driven over a
+    two-batch file source. Batch 1 buffers six
     unmatched rows on both sides; batch 2's far-future rows advance
     the global (min-policy) watermark past every batch-1 join window,
     so the state store must EVICT them — numRowsTotal drops from 6 to
     the 2 still-live batch-2 rows instead of growing monotonically
     with input."""
+    from etl_energy_tracker_spark.streaming.jobs import clicks_purchases
+
     src = str(tmp_path / "asym_src")
     base = dt.datetime(2024, 1, 1, 10, 0)
     schema = "ts timestamp, user_id long, event_type string, event_id long"
@@ -126,33 +128,7 @@ def test_full_outer_asym_state_evicts_on_watermark_advance(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    clicks = (
-        stream.where("event_type = 'click'")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        stream.where("event_type = 'purchase'")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "30 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id"
-            " AND click_ts >= purchase_ts - INTERVAL 60 MINUTES"
-            " AND click_ts <= purchase_ts"
-        ),
-        "full_outer",
-    )
+    joined = clicks_purchases(stream, "full_outer", "2 hours", "30 minutes")
     name = f"asymst_{uuid.uuid4().hex[:8]}"
     q = (
         joined.writeStream.outputMode("append")

@@ -13,18 +13,20 @@ from conftest import SF_DIR
 from etl_energy_tracker_spark.lake import Lake, latest_raw_period
 from etl_energy_tracker_spark.pipelines.common import normalize_schema_drift
 from etl_energy_tracker_spark.schemas import validate
-from etl_energy_tracker_spark.streaming.jobs import incremental_upsert_stream
+from etl_energy_tracker_spark.streaming.jobs import (
+    clicks_purchases,
+    drive,
+    incremental_upsert_stream,
+)
 
 
 @pytest.mark.slow
 def test_batch_and_stream_share_timestamp_contract(spark, tmp_path):
-    """Batch ``load_table`` and streaming ``_events_stream`` must decode
+    """Batch ``load_table`` and streaming ``events_stream`` must decode
     the SAME parquet bytes to the SAME instants under BOTH timestamp
     encodings the testdata has shipped (r1 TIMESTAMP(NANOS), r2+
     TIMESTAMP(MICROS)) — the one-contract guarantee from commit
     'Share one timestamp-encoding contract' (ADVICE r3 follow-up)."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -32,7 +34,7 @@ def test_batch_and_stream_share_timestamp_contract(spark, tmp_path):
         events_ts_is_nanos,
         load_table,
     )
-    from etl_energy_tracker_spark.streaming.jobs import _events_stream
+    from etl_energy_tracker_spark.streaming.jobs import events_stream
 
     instants = [
         dt.datetime(2024, 1, 15, 10, 0, 0, 123456),
@@ -56,21 +58,6 @@ def test_batch_and_stream_share_timestamp_contract(spark, tmp_path):
         pq.write_table(t, str(d / "events.parquet"))
         return str(d)
 
-    def drive(stream):
-        name = f"ts_contract_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(name)
-
     results = {}
     for unit in ("ns", "us"):
         sf = write_events(unit)
@@ -81,7 +68,7 @@ def test_batch_and_stream_share_timestamp_contract(spark, tmp_path):
         }
         stream = {
             r["event_id"]: r["ts"]
-            for r in drive(_events_stream(spark, sf)).select("event_id", "ts").collect()
+            for r in drive(events_stream(spark, sf), "append").select("event_id", "ts").collect()
         }
         assert batch == stream, f"batch vs stream disagree for {unit}"
         results[unit] = batch
@@ -89,6 +76,46 @@ def test_batch_and_stream_share_timestamp_contract(spark, tmp_path):
     assert results["ns"] == results["us"]
     assert results["us"][0] == instants[0]
     assert results["us"][2] == instants[2]
+
+
+@pytest.mark.parametrize("available_now", [False, True])
+def test_drive_contract(spark, tmp_path, available_now):
+    """``drive`` raises when its query fails during execution, and it
+    still restores the session's shuffle width and stops the query. A
+    successful drive runs at the drive's own shuffle width, captures
+    the stream's plan and returns the sink's rows."""
+    from etl_energy_tracker_spark.streaming.jobs import (
+        DRIVE_SHUFFLE_PARTITIONS,
+        clear_stream_plan,
+        last_stream_plan,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1,), (2,)], "x long").write.parquet(src)
+    stream = spark.readStream.schema("x long").parquet(src)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        failing = stream.select(
+            "x", F.raise_error(F.lit("drive contract")).cast("string").alias("e")
+        )
+        with pytest.raises(Exception, match="drive contract"):
+            drive(failing, "append", available_now)
+        assert spark.conf.get(key) == "3"
+        assert spark.streams.active == []
+
+        clear_stream_plan()
+        out = drive(stream.groupBy("x").count(), "complete", available_now)
+        assert sorted((r.x, r["count"]) for r in out.collect()) == [(1, 1), (2, 1)]
+        plan = last_stream_plan()
+        assert "StateStoreSave" in plan
+        assert "hashpartitioning(x#" in plan
+        assert f", {DRIVE_SHUFFLE_PARTITIONS})" in plan
+        assert spark.conf.get(key) == "3"
+        assert spark.streams.active == []
+    finally:
+        spark.conf.set(key, prev)
 
 
 @pytest.mark.slow
@@ -251,11 +278,11 @@ def test_stream_stream_join_is_watermarked(spark):
     """Both join sides carry event-time watermarks and the range
     condition is present — the state-eviction contract for unbounded
     stream-stream joins — and the drive matches the batch equivalent."""
-    from etl_energy_tracker_spark.streaming.jobs import clicks_purchases_join_stream
+    from etl_energy_tracker_spark.queries.streamops import stream_stream_join
     from etl_energy_tracker_spark.sources.registry import load_table
     from pyspark.sql import functions as F
 
-    out = clicks_purchases_join_stream(spark, SF_DIR)
+    out = stream_stream_join(spark, SF_DIR)
     got = {(r["purchase_id"], r["click_id"]) for r in out.collect()}
 
     ev = load_table(spark, "events", SF_DIR)
@@ -433,8 +460,6 @@ def test_left_outer_join_global_watermark_strict(spark, tmp_path):
     one above emits nothing. (First draft of the catalog oracle
     assumed the left side's own watermark with <=; both wrong —
     pinned here so the rule cannot drift.)"""
-    import uuid
-
     src = str(tmp_path / "lo_src")
     base = dt.datetime(2024, 1, 1, 10, 0)
     schema = "ts timestamp, user_id long, event_type string, event_id long"
@@ -451,47 +476,10 @@ def test_left_outer_join_global_watermark_strict(spark, tmp_path):
         "append"
     ).parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    clicks = (
-        stream.where("event_type = 'click'")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        stream.where("event_type = 'purchase'")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id"
-            " AND click_ts >= purchase_ts - INTERVAL 60 MINUTES"
-            " AND click_ts <= purchase_ts"
-        ),
-        "left_outer",
-    )
-    name = f"lo_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    joined = clicks_purchases(stream, "left_outer", "1 hour", "1 hour")
     got = sorted(
         (r.purchase_id, r.click_id)
-        for r in spark.table(name).collect()
+        for r in drive(joined, "append").collect()
     )
     # only purchase 3 (strictly below the 13:00 global watermark)
     # emitted a null row; the boundary row 2 and the ahead row 4
@@ -588,8 +576,6 @@ def test_full_outer_join_own_window_end_rule(spark, tmp_path):
     Purchase windows end at purchase_ts; click windows end at
     click_ts + 60 min. A click whose window end equals the watermark
     stays in state."""
-    import uuid
-
     src = str(tmp_path / "fo_src")
     base = dt.datetime(2024, 1, 1, 10, 0)
     schema = "ts timestamp, user_id long, event_type string, event_id long"
@@ -610,47 +596,10 @@ def test_full_outer_join_own_window_end_rule(spark, tmp_path):
         "append"
     ).parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    clicks = (
-        stream.where("event_type = 'click'")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        stream.where("event_type = 'purchase'")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id"
-            " AND click_ts >= purchase_ts - INTERVAL 60 MINUTES"
-            " AND click_ts <= purchase_ts"
-        ),
-        "full_outer",
-    )
-    name = f"fo_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    joined = clicks_purchases(stream, "full_outer", "1 hour", "1 hour")
     got = sorted(
         (r.purchase_id or -1, r.click_id or -1)
-        for r in spark.table(name).collect()
+        for r in drive(joined, "append").collect()
     )
     assert got == [(-1, 2), (5, -1)]
 
@@ -667,8 +616,6 @@ def test_full_outer_asym_watermarks_min_policy(spark, tmp_path):
     symmetric 2 h delays the global watermark would sit at 14:00 and
     click 4 would stay (strict rule). Click 3 (end == 15:30) and
     purchase 6 (ts == 15:30) pin the strictness on both sides."""
-    import uuid
-
     src = str(tmp_path / "fo_asym_src")
     base = dt.datetime(2024, 1, 1, 10, 0)
     schema = "ts timestamp, user_id long, event_type string, event_id long"
@@ -685,47 +632,10 @@ def test_full_outer_asym_watermarks_min_policy(spark, tmp_path):
         "append"
     ).parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
-    clicks = (
-        stream.where("event_type = 'click'")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        stream.where("event_type = 'purchase'")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "30 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user = user_id"
-            " AND click_ts >= purchase_ts - INTERVAL 60 MINUTES"
-            " AND click_ts <= purchase_ts"
-        ),
-        "full_outer",
-    )
-    name = f"foa_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    joined = clicks_purchases(stream, "full_outer", "2 hours", "30 minutes")
     got = sorted(
         (r.purchase_id or -1, r.click_id or -1)
-        for r in spark.table(name).collect()
+        for r in drive(joined, "append").collect()
     )
     assert got == [(-1, 2), (-1, 4), (5, -1)]
 
@@ -738,8 +648,6 @@ def test_rate_limit_window_reset_and_cap(spark, tmp_path):
     scenario — an event arriving for an ALREADY-PASSED window in a
     later micro-batch resumes that window's true count (rejected here)
     instead of resetting it (which would wrongly admit)."""
-    import uuid
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from etl_energy_tracker_spark.streaming.jobs import (
@@ -790,20 +698,7 @@ def test_rate_limit_window_reset_and_cap(spark, tmp_path):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"rl_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = sorted(
-        spark.table(name).collect(), key=lambda r: r.n_events
-    )
+    rows = sorted(drive(out, "update").collect(), key=lambda r: r.n_events)
     final = rows[-1]
     # window A saw 6 events (4 + 1 in batch 2 + 1 late in batch 3):
     # 3 admitted; window B saw 2: both admitted -> 5 admitted, 3 rejected

@@ -4,8 +4,8 @@ For each query: count shuffle exchanges and broadcasts, detect parquet
 filter pushdown, and flag any row-at-a-time Python evaluation
 (BatchEvalPython) — which this engine bans on the data path (only
 Arrow-batched ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas
-are allowed). Streaming-driven queries are skipped (their plan is the
-batch oracle's concern; state operators are pytest-covered).
+are allowed). A query that drives a stream is audited on the stream's
+executed plan, as captured by ``streaming.jobs.drive``.
 
 Usage: python tools/plan_audit.py [sf_dir] [--md | --snapshot]
 
@@ -27,17 +27,6 @@ sys.path.insert(0, ROOT)
 
 from etl_energy_tracker_spark.queries import catalog  # noqa: E402
 from etl_energy_tracker_spark.session import get_spark  # noqa: E402
-
-# queries that synchronously drive a stream: the plan lives in the
-# streaming runtime, not the returned memory-sink DataFrame, so the
-# audit drives the stream and reads the captured explainInternal()
-# from streaming.jobs.last_stream_plan() (VERDICT r7 task 5 — these 9
-# were the tripwire's blind spot).
-_STREAMING = {
-    "streaming_hourly_agg", "stateful_user_totals", "stream_stream_join",
-    "session_window_agg", "stream_dedup", "stream_funnel_stage",
-    "stream_topk_trending", "stream_ewma_anomaly", "stream_cusum_alarm",
-}
 
 # Queries allowed a NON-scalar-agg single-partition exchange
 # (sp_global > 0), each mapped to the bounded input the docstring
@@ -170,16 +159,15 @@ def audit(sf_dir: str, names: list[str] | None = None) -> list[dict]:
     rows = []
     for name in qs if names is None else names:
         try:
+            # a query that drives a stream has its plan in the streaming
+            # runtime, not in the memory-sink table it returns: audit the
+            # plan the drive captured, if this query drove one
+            stream_jobs.clear_stream_plan()
             df = qs[name](spark, sf_dir)
-            if name in _STREAMING:
-                plan = stream_jobs.last_stream_plan()
-                if plan is None:
-                    rows.append(
-                        {"query": name, "error": "no streaming plan captured"}
-                    )
-                    continue
-            else:
-                plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = (
+                stream_jobs.last_stream_plan()
+                or df._jdf.queryExecution().executedPlan().toString()
+            )
         except Exception as ex:  # pragma: no cover - diagnostic tool
             rows.append({"query": name, "error": str(ex)[:120]})
             continue
