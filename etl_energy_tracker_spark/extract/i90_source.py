@@ -162,10 +162,8 @@ def grid_to_wide_df(spark: SparkSession, grid: list[list]) -> DataFrame:
     return local_frame(spark, data, cols)
 
 
-def melt_hour_columns(
-    df: DataFrame, value_name: str = "volumenes"
-) -> DataFrame:
-    """Wide hour columns → long (hora, value) rows via native unpivot
+def melt_hour_columns(df: DataFrame) -> DataFrame:
+    """Wide hour columns → long (hora, volumenes) rows via native unpivot
     (§2.8; _descargador_i90.py:260-266). Hour columns are the numeric
     ones; granularity is tagged from their count (≤25 → hourly,
     else 15-min indices). NA/0 values drop at ingest
@@ -177,11 +175,11 @@ def melt_hour_columns(
         ids=id_cols,
         values=hour_cols,
         variableColumnName="hora",
-        valueColumnName=value_name,
+        valueColumnName="volumenes",
     )
     return (
-        long.withColumn(value_name, F.col(value_name).cast("double"))
-        .where(F.col(value_name).isNotNull() & (F.col(value_name) != 0))
+        long.withColumn("volumenes", F.col("volumenes").cast("double"))
+        .where(F.col("volumenes").isNotNull() & (F.col("volumenes") != 0))
         .withColumn("granularity", F.lit(granularity))
     )
 
@@ -191,12 +189,11 @@ def sheet_to_raw(
     grid: list[list],
     fecha: str,
     sheet_id: str,
-    value_name: str = "volumenes",
 ) -> DataFrame:
     """Full sheet → raw rows: header detection, melt, date + sheet tag
     (the reference's extract_sheets_of_interest per-sheet body)."""
     wide = grid_to_wide_df(spark, grid)
-    long = melt_hour_columns(wide, value_name)
+    long = melt_hour_columns(wide)
     return long.withColumn("fecha", F.lit(fecha)).withColumn(
         "sheet_i90_volumenes", F.lit(sheet_id)
     )

@@ -49,15 +49,13 @@ UP_CSV_COLUMNS = {
 }
 
 
-def parse_up_list_csv(
-    spark: SparkSession, text: str, date_updated: str, sep: str = ";"
-) -> DataFrame:
-    """UP export CSV -> up_listado incoming frame
+def parse_up_list_csv(spark: SparkSession, text: str, date_updated: str) -> DataFrame:
+    """';'-separated UP export CSV -> up_listado incoming frame
     (UP_tracking.py:95-160): validate required columns, keep
     'Generación' UPs, European-decimal potencia, obsoleta=0, stamped.
     Raises ValueError naming missing columns, like the reference."""
     lines = [ln for ln in text.splitlines() if ln.strip()]
-    header, *records = list(csv.reader(lines, delimiter=sep)) or [[]]
+    header, *records = list(csv.reader(lines, delimiter=";")) or [[]]
     missing = [c for c in UP_CSV_COLUMNS if c not in header]
     if missing:
         raise ValueError(f"Missing required columns in CSV: {', '.join(missing)}")
@@ -97,15 +95,13 @@ _UOF_RENAMES = {
 _UOF_DROPS = ("DESCRIPCIÓN", "DESCRIPCION", "PORCENTAJE PROPIEDAD")
 
 
-def parse_uof_grid(
-    spark: SparkSession, grid: list[list], header_row: int = 3
-) -> DataFrame:
+def parse_uof_grid(spark: SparkSession, grid: list[list]) -> DataFrame:
     """OMIE 'Listado de unidades' grid -> UOF dim frame
     (descarga_uofs_omie.py:44-76): header on the 4th row, all-empty
     columns dropped, DESCRIPCIÓN / PORCENTAJE PROPIEDAD dropped,
     canonical renames, remaining headers lowercased."""
     header = [
-        " ".join(str(c).split()) if c is not None else "" for c in grid[header_row]
+        " ".join(str(c).split()) if c is not None else "" for c in grid[3]
     ]
     # normalize ragged rows to the header width (Excel-extracted grids
     # routinely drop trailing empty cells): pad short rows with None,
@@ -113,7 +109,7 @@ def parse_uof_grid(
     rows = [
         [None if c is None else str(c) for c in r[: len(header)]]
         + [None] * max(0, len(header) - len(r))
-        for r in grid[header_row + 1 :]
+        for r in grid[4:]
     ]
     keep = [
         i
@@ -136,24 +132,18 @@ def download_uof_list(spark: SparkSession, fetcher: GridFetcher) -> DataFrame:
     return parse_uof_grid(spark, fetcher(UOF_LIST_URL))
 
 
-def parse_bsp_list(
-    spark: SparkSession,
-    grid: list[list],
-    zone_col: str = "Descripción corta BSP-aFRR",
-    code_col: str = "Código BSP-aFRR",
-) -> DataFrame:
+def parse_bsp_list(spark: SparkSession, grid: list[list]) -> DataFrame:
     """BSP LSI list -> (esios_id, i90_id) regulation-zone mapping, the
     ``mapping`` input of operators/zr.zr_change_log
     (descarga_bsp_esios.py:129-190 downloads the file behind a
     client-certificate login; the fetcher owns that transport).
     First row is the header; parsing delegates to
-    operators/zr.bsp_mapping (ZR_tracking.py:138-171), whose REE
-    column names are the defaults — parameters because the portal
-    export localizes them."""
-    from ..operators.zr import bsp_mapping
+    operators/zr.bsp_mapping (ZR_tracking.py:138-171), which names the
+    two REE columns it reads."""
+    from ..operators.zr import BSP_CODE_COL, BSP_ZONE_COL, bsp_mapping
 
     header = [str(c).strip() if c is not None else "" for c in grid[0]]
-    for want in (zone_col, code_col):
+    for want in (BSP_ZONE_COL, BSP_CODE_COL):
         if want not in header:
             raise ValueError(f"Missing required column in BSP list: {want!r}")
     rows = [
@@ -163,9 +153,7 @@ def parse_bsp_list(
         if any(r)
     ]
     cols = ", ".join(f"`{c}` string" for c in header)
-    return bsp_mapping(
-        local_frame(spark, rows, cols), esios_col=zone_col, i90_col=code_col
-    )
+    return bsp_mapping(local_frame(spark, rows, cols))
 
 
 def download_bsp_list(spark: SparkSession, fetcher: GridFetcher) -> DataFrame:

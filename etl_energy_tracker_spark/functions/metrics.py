@@ -13,13 +13,11 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def observe_value_quality(
-    df: DataFrame, value_col: str, name: str = "value_quality"
-) -> tuple[DataFrame, Observation]:
+def observe_value_quality(df: DataFrame, value_col: str) -> tuple[DataFrame, Observation]:
     """Attach the reference's quality metrics to the frame. Returns
     (observed frame, observation); read ``observation.get`` after the
     next action on the frame."""
-    obs = Observation(name)
+    obs = Observation("value_quality")
     v = F.col(value_col)
     observed = df.observe(
         obs,

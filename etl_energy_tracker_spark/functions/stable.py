@@ -31,11 +31,9 @@ def stable_sum(col: Column | str, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def stable_avg(col: Column | str, alias: str | None = None, digits: int = 6) -> Column:
+def stable_avg(col: Column | str, alias: str | None = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    out = F.round(
-        F.sum(c.cast(DECIMAL_T)).cast("double") / F.count(c), digits
-    )
+    out = F.round(F.sum(c.cast(DECIMAL_T)).cast("double") / F.count(c), 6)
     return out.alias(alias) if alias else out
 
 
@@ -44,8 +42,8 @@ def stable_sum_expr(sql_expr: str) -> str:
     return f"CAST(SUM(CAST(({sql_expr}) AS DECIMAL(38,6))) AS DOUBLE)"
 
 
-def stable_avg_expr(sql_expr: str, digits: int = 6) -> str:
+def stable_avg_expr(sql_expr: str) -> str:
     return (
         f"ROUND(CAST(SUM(CAST(({sql_expr}) AS DECIMAL(38,6))) AS DOUBLE)"
-        f" / COUNT({sql_expr}), {digits})"
+        f" / COUNT({sql_expr}), 6)"
     )

@@ -145,27 +145,13 @@ class Lake:
     def raw_path(self, mercado: str, dataset: str) -> str:
         return f"{self.base}/raw/{mercado}/{dataset}"
 
-    def write_raw(
-        self,
-        df: DataFrame,
-        mercado: str,
-        dataset: str,
-        year_col: str = "year",
-        month_col: str = "month",
-        dedup: bool = True,
-    ) -> None:
+    def write_raw(self, df: DataFrame, mercado: str, dataset: str) -> None:
         """Append+dedup raw sink (K1): merge with existing rows of the
-        touched (year, month) partitions, exact-row dedup (skipped for
-        `continuo` — duplicates are legitimate trades), dynamic
+        touched (year, month) partitions, exact-row dedup, dynamic
         partition overwrite. Existing rows read back with the batch's
         own schema."""
-        self._merge_write(
-            df,
-            self.raw_path(mercado, dataset),
-            [year_col, month_col],
-            df.schema,
-            DataFrame.dropDuplicates if dedup else lambda merged: merged,
-        )
+        path = self.raw_path(mercado, dataset)
+        self._merge_write(df, path, ["year", "month"], df.schema, DataFrame.dropDuplicates)
 
     def read_raw(self, mercado: str, dataset: str) -> DataFrame:
         return self.spark.read.parquet(self.raw_path(mercado, dataset))
@@ -356,17 +342,19 @@ def latest_raw_period(lake: Lake, mercado: str, dataset: str) -> tuple[int, int]
 # used only to size the rewrite's shuffle partitions, so a rough factor
 # is fine (AQE coalesces the remainder).
 _DECOMPRESS_FACTOR = 3
+# compaction rewrites leaves holding at least this many files, into
+# files of about this many bytes
+_COMPACT_MIN_FILES = 2
+_COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
-def _fragmented_leaves(
-    path: str, min_files_per_leaf: int
-) -> tuple[list[str], int]:
+def _fragmented_leaves(path: str) -> tuple[list[str], int]:
     """Driver-side leaf discovery: (over-fragmented leaf dirs, their
     total on-disk bytes)."""
     todo: list[str] = []
     total = 0
     for dirpath, files in _leaves(path):
-        if len(files) >= min_files_per_leaf:
+        if len(files) >= _COMPACT_MIN_FILES:
             todo.append(dirpath)
             total += sum(
                 os.path.getsize(os.path.join(dirpath, f)) for f in files
@@ -374,12 +362,7 @@ def _fragmented_leaves(
     return todo, total
 
 
-def compaction_plan(
-    lake: Lake,
-    dataset: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_per_leaf: int = 2,
-) -> tuple[DataFrame, list[str]] | None:
+def compaction_plan(lake: Lake, dataset: str) -> tuple[DataFrame, list[str]] | None:
     """Build the compaction rewrite plan (without executing it).
 
     Reads ONLY the over-fragmented leaves (the leaf dirs are passed as
@@ -395,11 +378,11 @@ def compaction_plan(
     Returns ``(df, leaf_dirs)`` or ``None`` when nothing is fragmented.
     """
     path = lake.processed_path(dataset)
-    todo, total_bytes = _fragmented_leaves(path, min_files_per_leaf)
+    todo, total_bytes = _fragmented_leaves(path)
     if not todo:
         return None
     n_parts = max(
-        len(todo), -(-total_bytes * _DECOMPRESS_FACTOR // target_file_bytes)
+        len(todo), -(-total_bytes * _DECOMPRESS_FACTOR // _COMPACT_TARGET_FILE_BYTES)
     )
     df = lake.spark.read.schema(stored_schema(dataset)).option("basePath", path).parquet(*todo)
     compacted = df.repartitionByRange(
@@ -408,49 +391,24 @@ def compaction_plan(
     return compacted, todo
 
 
-def compact_processed(
-    lake: Lake,
-    dataset: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_per_leaf: int = 2,
-) -> int:
+def compact_processed(lake: Lake, dataset: str) -> int:
     """Small-file compaction for the processed zone.
 
     Daily upserts leave one file batch per run in each touched
     partition; over months a (mercado, id, year, month) leaf
     accumulates many small files, degrading scan parallelism and
-    footer-read overhead. Only leaves with ``min_files_per_leaf`` or
-    more files are rewritten; the new files land in a ``_compact_tmp``
-    staging dir (invisible to readers — underscore-prefixed) and are
-    swapped in per leaf, so the live table is readable throughout and
-    the job never checkpoints or re-counts the table. On an object
-    store / HDFS the swap step is the table-format commit (Iceberg,
-    Delta); the planning and rewrite are identical.
+    footer-read overhead. Only leaves with ``_COMPACT_MIN_FILES`` or
+    more files are rewritten, through the same dynamic partition
+    overwrite every upsert commits with (``Lake._dyn_overwrite``): the
+    rewrite stages its files and replaces exactly the leaves it read
+    at job commit, after every scanning task has finished; untouched
+    leaves are never rewritten. On an object store / HDFS the commit is the table
+    format's (Iceberg, Delta); the planning and rewrite are identical.
 
     Returns the number of leaf partitions rewritten."""
-    import shutil
-
-    plan = compaction_plan(lake, dataset, target_file_bytes, min_files_per_leaf)
+    plan = compaction_plan(lake, dataset)
     if plan is None:
         return 0
     compacted, leaf_dirs = plan
-    path = lake.processed_path(dataset)
-    tmp = f"{path}/_compact_tmp"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy(*_PARTITION_COLS)
-        .option("compression", "zstd")
-        .parquet(tmp)
-    )
-    # per-leaf swap: retire the old leaf, move the rewrite into place
-    for leaf in leaf_dirs:
-        rel = os.path.relpath(leaf, path)
-        new_leaf = os.path.join(tmp, rel)
-        if not os.path.isdir(new_leaf):  # pragma: no cover — empty leaf
-            continue
-        old = leaf + "__old"
-        os.rename(leaf, old)
-        os.rename(new_leaf, leaf)
-        shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
+    lake._dyn_overwrite(compacted, lake.processed_path(dataset), _PARTITION_COLS)
     return len(leaf_dirs)

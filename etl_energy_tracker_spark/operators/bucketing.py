@@ -21,17 +21,13 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     n_buckets: int = 16,
-    sort_cols: list[str] | None = None,
 ) -> None:
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).saveAsTable(table)
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, on: list[str]
 ) -> DataFrame:
     """Join two same-bucketed tables; with matching bucket specs the
     physical plan contains no Exchange (verify with .explain)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

@@ -40,9 +40,6 @@ def scd2_apply(
     changes: DataFrame,
     key: str,
     tracked_cols: list[str],
-    effective_col: str = "valid_from",
-    end_col: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """SCD Type-2: close the current version of changed keys and append
     the new version; history rows are immutable.
@@ -50,8 +47,8 @@ def scd2_apply(
     ``dim`` carries (key, tracked..., valid_from, valid_to, is_current);
     ``changes`` carries (key, tracked...). A change is any tracked-col
     difference vs the current version."""
-    cur = dim.where(F.col(current_col))
-    hist = dim.where(~F.col(current_col))
+    cur = dim.where(F.col("is_current"))
+    hist = dim.where(~F.col("is_current"))
 
     cmp_cond: Column = F.lit(False)
     for c in tracked_cols:
@@ -64,8 +61,8 @@ def scd2_apply(
     today = F.current_date()
     closed = (
         cur.join(F.broadcast(changed_keys), key, "left_semi")
-        .withColumn(end_col, today)
-        .withColumn(current_col, F.lit(False))
+        .withColumn("valid_to", today)
+        .withColumn("is_current", F.lit(False))
     )
     unchanged_cur = cur.join(changed_keys, key, "left_anti")
 
@@ -73,9 +70,9 @@ def scd2_apply(
     opening_keys = changed_keys.unionByName(new_keys)
     opened = (
         changes.join(F.broadcast(opening_keys), key, "left_semi")
-        .withColumn(effective_col, today)
-        .withColumn(end_col, F.lit(None).cast("date"))
-        .withColumn(current_col, F.lit(True))
+        .withColumn("valid_from", today)
+        .withColumn("valid_to", F.lit(None).cast("date"))
+        .withColumn("is_current", F.lit(True))
     )
     cols = dim.columns
     return (

@@ -45,14 +45,6 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    # try_divide: a zero-norm vector yields NULL similarity (ranked
-    # NULLS LAST downstream) instead of an ANSI divide-by-zero error.
-    return F.try_divide(
-        dot(a, b, dim), F.sqrt(dot(a, a, dim)) * F.sqrt(dot(b, b, dim))
-    )
-
-
 def with_norm(
     df: DataFrame, vec_col: str, out: str = "norm", dim: int | None = None
 ) -> DataFrame:
@@ -66,18 +58,18 @@ def brute_force_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
+    """Exact cosine top-k of ``embedding`` per query."""
     # norms hoisted out of the cross join: each side pays one fold per
     # ROW instead of three folds per PAIR (identical doubles — the same
     # expression on the same input, multiplied in the same order)
     q = with_norm(
-        queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv")),
+        queries.select(F.col(query_id).alias("query_id"), F.col("embedding").alias("qv")),
         "qv", "qn", dim=64,
     )
     c = with_norm(
-        corpus.select(F.col(corpus_id).alias("corpus_id"), F.col(vec_col).alias("cv")),
+        corpus.select(F.col(corpus_id).alias("corpus_id"), F.col("embedding").alias("cv")),
         "cv", "cn", dim=64,
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
@@ -108,14 +100,9 @@ def plane_weight(plane: int, dim: int) -> int:
     return (acc % 2001) - 1000
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    out: str = "bucket",
-    dim: int = 64,
-) -> DataFrame:
-    """Sign pattern of n_planes hyperplane projections → bucket id.
+def with_lsh_bucket(df: DataFrame, vec_col: str, n_planes: int) -> DataFrame:
+    """Sign pattern of n_planes hyperplane projections of a 64-dim
+    vector → the ``bucket`` column.
 
     The projection is one Arrow-batched matmul (vectors × plane matrix)
     — a vectorized Pandas UDF, ~10× faster than the per-element
@@ -127,7 +114,7 @@ def with_lsh_bucket(
     from pyspark.sql.functions import pandas_udf
 
     w = np.array(
-        [[plane_weight(p, d) for p in range(n_planes)] for d in range(dim)],
+        [[plane_weight(p, d) for p in range(n_planes)] for d in range(64)],
         dtype="float64",
     )
     powers = np.array([1 << p for p in range(n_planes)], dtype="int64")
@@ -138,7 +125,7 @@ def with_lsh_bucket(
         proj = m @ w[: m.shape[1]]  # (batch, n_planes)
         return pd.Series(((proj >= 0) @ powers).astype("int64"))
 
-    return df.withColumn(out, bucket_of(F.col(vec_col)))
+    return df.withColumn("bucket", bucket_of(F.col(vec_col)))
 
 
 def lsh_topk(
@@ -146,14 +133,14 @@ def lsh_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 8,
 ) -> DataFrame:
-    """Approximate top-k: join on LSH bucket, exact cosine within."""
+    """Approximate top-k of ``embedding``: join on LSH bucket, exact
+    cosine within."""
     q = with_norm(
         with_lsh_bucket(
-            queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv")),
+            queries.select(F.col(query_id).alias("query_id"), F.col("embedding").alias("qv")),
             "qv",
             n_planes,
         ),
@@ -163,7 +150,7 @@ def lsh_topk(
     )
     c = with_norm(
         with_lsh_bucket(
-            corpus.select(F.col(corpus_id).alias("corpus_id"), F.col(vec_col).alias("cv")),
+            corpus.select(F.col(corpus_id).alias("corpus_id"), F.col("embedding").alias("cv")),
             "cv",
             n_planes,
         ),
@@ -185,12 +172,12 @@ def lsh_topk(
     )
 
 
-def scaled_n_planes(n_vectors: int, target_bucket: int = 32, floor: int = 8) -> int:
+def scaled_n_planes(n_vectors: int) -> int:
     """Hyperplane count that scales with corpus size: bucket count
-    (2^planes per band) grows like N / target_bucket, so in-bucket
-    candidate pairs stay ~O(N · target_bucket) instead of O(N²/const).
-    At N = 1e9 and target 32 this is 25 planes (~33M buckets); small
-    corpora keep the floor. target_bucket dropped 500 -> 32 after the
+    (2^planes per band) grows like N / 32 (the target bucket size), so
+    in-bucket candidate pairs stay ~O(N · 32) instead of O(N²/const).
+    At N = 1e9 this is 25 planes (~33M buckets); small corpora keep the
+    floor of 8 planes. The target bucket dropped 500 -> 32 after the
     x30 scale probe: the old value left a wide quadratic window
     (planes sat at the floor until N > 128k while bucket sizes — and
     with clustered embeddings, HOT bucket sizes — grew linearly),
@@ -200,9 +187,9 @@ def scaled_n_planes(n_vectors: int, target_bucket: int = 32, floor: int = 8) -> 
     DuckDB oracle)."""
     import math
 
-    if n_vectors <= target_bucket:
-        return floor
-    return max(floor, math.ceil(math.log2(n_vectors / target_bucket)))
+    if n_vectors <= 32:
+        return 8
+    return max(8, math.ceil(math.log2(n_vectors / 32)))
 
 
 def with_lsh_bands(
@@ -210,10 +197,9 @@ def with_lsh_bands(
     vec_col: str,
     n_planes: int,
     n_bands: int,
-    out: str = "bands",
-    dim: int = 64,
 ) -> DataFrame:
-    """Multi-band LSH signatures: ``n_bands`` independent plane sets of
+    """Multi-band LSH signatures of a 64-dim vector as the ``bands``
+    column: ``n_bands`` independent plane sets of
     ``n_planes`` each (global plane index p ∈ [0, bands·planes), band =
     p div planes, bit = p mod planes). A pair is a candidate if it
     collides in ANY band — bands multiply recall the way MinHash-LSH
@@ -223,7 +209,7 @@ def with_lsh_bands(
 
     total = n_planes * n_bands
     w = np.array(
-        [[plane_weight(p, d) for p in range(total)] for d in range(dim)],
+        [[plane_weight(p, d) for p in range(total)] for d in range(64)],
         dtype="float64",
     )
     powers = np.array([1 << (p % n_planes) for p in range(total)], dtype="int64")
@@ -242,7 +228,7 @@ def with_lsh_bands(
         )  # (batch, n_bands)
         return pd.Series(list(res))
 
-    return df.withColumn(out, bands_of(F.col(vec_col)))
+    return df.withColumn("bands", bands_of(F.col(vec_col)))
 
 
 def cosine_pairs(
@@ -250,9 +236,8 @@ def cosine_pairs(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    out: str = "cosine",
 ) -> DataFrame:
-    """Score candidate (id_a, id_b) pairs with exact cosine via one
+    """Score candidate (id_a, id_b) pairs with exact ``cosine`` via one
     Arrow-batched numpy kernel (row-wise dot of the two stacked
     matrices) — replaces the interpreted zip_with/aggregate fold that
     cost ~128 lambda evaluations per pair. Norms are computed once per
@@ -290,7 +275,8 @@ def cosine_pairs(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .withColumn(
-            out, F.try_divide(batch_dot(F.col("_va"), F.col("_vb")), F.col("_na") * F.col("_nb"))
+            "cosine",
+            F.try_divide(batch_dot(F.col("_va"), F.col("_vb")), F.col("_na") * F.col("_nb")),
         )
         .drop("_va", "_vb", "_na", "_nb")
     )
@@ -303,8 +289,6 @@ def near_dup_pairs(
     threshold: float,
     n_vectors: int,
     n_bands: int = 2,
-    target_bucket: int = 32,
-    dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, scale-safe:
 
@@ -317,7 +301,7 @@ def near_dup_pairs(
 
     Caller passes ``n_vectors`` (a cheap count / table statistic) so the
     plan stays lazily composable."""
-    n_planes = scaled_n_planes(n_vectors, target_bucket)
+    n_planes = scaled_n_planes(n_vectors)
     banded = (
         with_lsh_bands(
             vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vv")),
@@ -361,10 +345,10 @@ def with_ivf_cell(
     vec_col: str,
     id_col: str,
     n_probe: int = 1,
-    out: str = "cell",
     dim: int | None = 64,
 ) -> DataFrame:
-    """IVF cell assignment: nearest ``n_probe`` centroids by cosine.
+    """IVF cell assignment: nearest ``n_probe`` centroids by cosine, as
+    the ``cell`` column.
 
     ``centroids`` is the codebook (centroid_id, cv) — small, broadcast.
     In a production IVF the codebook comes from k-means over a sample;
@@ -429,13 +413,13 @@ def with_ivf_cell(
                 F.col(c) if c == id_col else F.col(f"_k.{c}").alias(c)
                 for c in df.columns
             ],
-            F.col("_k._cid").alias(out),
+            F.col("_k._cid").alias("cell"),
         )
     w = W.partitionBy(id_col).orderBy(F.desc("_sim"), "centroid_id")
     return (
         scored.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= n_probe)
-        .withColumn(out, F.col("centroid_id"))
+        .withColumn("cell", F.col("centroid_id"))
         .drop("cv", "_sim", "_rk", "centroid_id", "_vn", "_cn")
     )
 
@@ -511,7 +495,6 @@ def train_ivf_codebook(
     vec_col: str,
     k: int = 16,
     iters: int = 1,
-    dim: int = 64,
 ) -> DataFrame:
     """Data-derived IVF codebook: deterministic k-means.
 
@@ -555,16 +538,16 @@ def train_ivf_codebook(
         scored = vectors.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vv")
         ).withColumn(
-            "_vn", F.sqrt(dot(F.col("vv"), F.col("vv"), dim))
+            "_vn", F.sqrt(dot(F.col("vv"), F.col("vv"), 64))
         ).crossJoin(
             F.broadcast(
-                cent.withColumn("_cn", F.sqrt(dot(F.col("cv"), F.col("cv"), dim)))
+                cent.withColumn("_cn", F.sqrt(dot(F.col("cv"), F.col("cv"), 64)))
             )
         ).withColumn(
             "_sim",
             F.round(
                 F.try_divide(
-                    dot(F.col("vv"), F.col("cv"), dim), F.col("_vn") * F.col("_cn")
+                    dot(F.col("vv"), F.col("cv"), 64), F.col("_vn") * F.col("_cn")
                 ),
                 6,
             ),
@@ -588,17 +571,16 @@ def ivf_topk(
     centroids: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 2,
 ) -> DataFrame:
-    """IVF approximate top-k: corpus indexed into cells (nearest
-    centroid), queries probe their n_probe nearest cells, exact cosine
-    rescoring within the probed cells only. Same bucket-then-rescore
-    shape as LSH, but with a data-derived codebook — better recall on
+    """IVF approximate top-k of ``embedding``: corpus indexed into
+    cells (nearest centroid), queries probe their n_probe nearest
+    cells, exact cosine rescoring within the probed cells only. Same
+    bucket-then-rescore shape as LSH, but with a data-derived codebook — better recall on
     clustered corpora; needs the (cheap, sampled) training pass."""
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(corpus_id).alias("corpus_id"), F.col(vec_col).alias("ev"))
+    q = queries.select(F.col(query_id).alias("query_id"), F.col("embedding").alias("qv"))
+    c = corpus.select(F.col(corpus_id).alias("corpus_id"), F.col("embedding").alias("ev"))
     q_cells = with_ivf_cell(q, centroids, "qv", "query_id", n_probe=n_probe)
     c_cells = with_norm(
         with_ivf_cell(c, centroids, "ev", "corpus_id", n_probe=1), "ev", "cn", dim=64

@@ -19,7 +19,6 @@ def salted_join(
     dim: DataFrame,
     key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join fact⋈dim on ``key`` with the fact side salted.
 
@@ -32,5 +31,5 @@ def salted_join(
     salted_dim = dim.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    out = salted_fact.join(salted_dim, [key, "_salt"], how)
+    out = salted_fact.join(salted_dim, [key, "_salt"])
     return out.drop("_salt")

@@ -22,9 +22,7 @@ def detect_changes(incoming: DataFrame, dimension: DataFrame, key: str) -> DataF
     return new.unionByName(obsolete)
 
 
-def apply_changes(
-    incoming: DataFrame, dimension: DataFrame, key: str, obsolete_col: str = "obsoleta"
-) -> DataFrame:
+def apply_changes(incoming: DataFrame, dimension: DataFrame, key: str) -> DataFrame:
     """Updated dimension: new entities appended (obsoleta=0), missing
     entities flagged obsoleta=1, surviving entities keep their row.
     Matches the up_listado shape (FIXTURES.md §3.2)."""
@@ -32,7 +30,7 @@ def apply_changes(
     new_rows = (
         changes.where(F.col("change") == "new")
         .select(key)
-        .withColumn(obsolete_col, F.lit(0))
+        .withColumn("obsoleta", F.lit(0))
         .withColumn("date_updated", F.current_date())
     )
     obsolete_keys = changes.where(F.col("change") == "obsolete").select(key)
@@ -41,10 +39,10 @@ def apply_changes(
     )
     flagged = (
         dimension.join(F.broadcast(obsolete_keys), key, "left_semi")
-        .withColumn(obsolete_col, F.lit(1))
+        .withColumn("obsoleta", F.lit(1))
         .withColumn("date_updated", F.current_date())
     )
-    cols = [key, obsolete_col, "date_updated"]
+    cols = [key, "obsoleta", "date_updated"]
     return (
         kept.select(*cols)
         .unionByName(flagged.select(*cols))
@@ -150,7 +148,6 @@ def up_change_log(
 def map_tecnologia_id(
     df: DataFrame,
     tecnologias: DataFrame,
-    tipo_col: str = "tipo_produccion",
     strict: bool = True,
 ) -> DataFrame:
     """tipo_produccion → tecnologia_id via the technology dim
@@ -159,27 +156,21 @@ def map_tecnologia_id(
     reference raises on unmapped), enforced JVM-side with raise_error —
     no driver-side scan."""
     t = tecnologias.select(
-        F.col("tecnologia").alias(tipo_col), F.col("id").alias("tecnologia_id")
+        F.col("tecnologia").alias("tipo_produccion"), F.col("id").alias("tecnologia_id")
     )
-    joined = df.join(F.broadcast(t), tipo_col, "left")
+    joined = df.join(F.broadcast(t), "tipo_produccion", "left")
     tid = F.col("tecnologia_id")
     if strict:
         tid = F.when(
-            tid.isNull() & F.col(tipo_col).isNotNull(),
+            tid.isNull() & F.col("tipo_produccion").isNotNull(),
             F.raise_error(
-                F.concat(F.lit("unmapped production type: "), F.col(tipo_col))
+                F.concat(F.lit("unmapped production type: "), F.col("tipo_produccion"))
             ),
         ).otherwise(tid)
-    return joined.withColumn("tecnologia_id", tid).drop(tipo_col)
+    return joined.withColumn("tecnologia_id", tid).drop("tipo_produccion")
 
 
-def update_tecnologias(
-    p48_raw: DataFrame,
-    dim: DataFrame,
-    concepto_col: str = "Concepto",
-    name_col: str = "tecnologia",
-    id_col: str = "id",
-) -> DataFrame:
+def update_tecnologias(p48_raw: DataFrame, dim: DataFrame) -> DataFrame:
     """Technology-dimension maintenance from P48 data — Spark rendering
     of tecnologias_generacion/p48_tecnologias_generacion.py:27-108: the
     distinct non-null Concepto values of the latest P48 file that are
@@ -190,18 +181,18 @@ def update_tecnologias(
     of *new* names, never on the P48 fact rows (distinct reduces
     first)."""
     incoming = (
-        p48_raw.select(F.col(concepto_col).alias(name_col))
-        .where(F.col(name_col).isNotNull())
+        p48_raw.select(F.col("Concepto").alias("tecnologia"))
+        .where(F.col("tecnologia").isNotNull())
         .distinct()
     )
-    new = incoming.join(dim.select(name_col), name_col, "left_anti")
-    max_id = dim.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("_mx"))
+    new = incoming.join(dim.select("tecnologia"), "tecnologia", "left_anti")
+    max_id = dim.agg(F.coalesce(F.max("id"), F.lit(0)).alias("_mx"))
     new_rows = (
         new.crossJoin(F.broadcast(max_id))
         .withColumn(
-            id_col,
-            (F.col("_mx") + F.row_number().over(W.orderBy(name_col))).cast("int"),
+            "id",
+            (F.col("_mx") + F.row_number().over(W.orderBy("tecnologia"))).cast("int"),
         )
-        .select(id_col, name_col)
+        .select("id", "tecnologia")
     )
-    return dim.select(id_col, name_col).unionByName(new_rows)
+    return dim.select("id", "tecnologia").unionByName(new_rows)

@@ -67,12 +67,11 @@ def eligible_ups(
     change_log: DataFrame,
     links: DataFrame,
     as_of: str,
-    window_days: int = ELIGIBILITY_WINDOW_DAYS,
 ) -> DataFrame:
     """The 93-day eligibility queue
     (_vinculacion_monitoring.py:17-22, vinculacion_config
     ``get_linking_target_date``): UPs whose latest state is
-    'habilitada' with the enable date at least ``window_days`` before
+    'habilitada' with the enable date at least ``ELIGIBILITY_WINDOW_DAYS`` before
     ``as_of``, and that have no UP↔UOF link yet.
 
     Returns (UP, enabled_date, days_enabled) — the retry queue: a UP
@@ -86,7 +85,7 @@ def eligible_ups(
         "UP", F.col("state_date").alias("enabled_date")
     )
     aged = enabled.where(
-        F.col("enabled_date") <= F.date_sub(F.to_date(F.lit(as_of)), window_days)
+        F.col("enabled_date") <= F.date_sub(F.to_date(F.lit(as_of)), ELIGIBILITY_WINDOW_DAYS)
     ).withColumn(
         "days_enabled",
         F.datediff(F.to_date(F.lit(as_of)), F.col("enabled_date")).cast("int"),
@@ -137,9 +136,7 @@ def find_link_changes(
     return changed.unionByName(unlinked), new_links
 
 
-def classify_unlinked(
-    all_changes: DataFrame, listado: DataFrame, obsolete_col: str = "obsoleta"
-) -> DataFrame:
+def classify_unlinked(all_changes: DataFrame, listado: DataFrame) -> DataFrame:
     """Reference ``_filter_valid_unlinked_ups``
     (_vinculacion_monitoring.py:143-183): UPs that lost their match
     split by the listado obsoleta flag — obsolete/invalid UPs get
@@ -149,7 +146,7 @@ def classify_unlinked(
     Returns all_changes with a ``kind`` column ∈
     {'uof_change', 'obsolete', 'unknown'}."""
     flags = F.broadcast(
-        listado.select("UP", F.col(obsolete_col).alias("_obs"))
+        listado.select("UP", F.col("obsoleta").alias("_obs"))
     )
     j = all_changes.join(flags, "UP", "left")
     kind = (
@@ -219,7 +216,6 @@ def link_outcome_log(
     matched: DataFrame,
     listado: DataFrame,
     date_updated: str,
-    obsolete_col: str = "obsoleta",
 ) -> DataFrame:
     """Per-eligible-UP outcome record feeding the retry loop (the
     monitoring close-the-loop the reference runs daily,
@@ -228,7 +224,7 @@ def link_outcome_log(
     otherwise — the UP stays eligible and is retried next run."""
     got = F.broadcast(matched.select("UP").distinct().withColumn("_hit", F.lit(1)))
     obs = F.broadcast(
-        listado.where(F.col(obsolete_col) == 1).select("UP").withColumn("_obs", F.lit(1))
+        listado.where(F.col("obsoleta") == 1).select("UP").withColumn("_obs", F.lit(1))
     )
     outcome = (
         F.when(F.col("_hit") == 1, "linked")
@@ -253,13 +249,12 @@ def monitor_links(
     new_matches: DataFrame,
     listado: DataFrame,
     as_of: str,
-    window_days: int = ELIGIBILITY_WINDOW_DAYS,
 ) -> dict[str, DataFrame]:
     """The full monitoring round (reference ``monitor_existing_links``,
     _vinculacion_monitoring.py:346-430): eligibility queue, change
     diff, classification, change log, updated links, outcome log.
     Returns the frames; the caller persists them (lake or JDBC)."""
-    eligible = eligible_ups(change_log, current_links, as_of, window_days)
+    eligible = eligible_ups(change_log, current_links, as_of)
     changes, new_links = find_link_changes(current_links, new_matches)
     classified = classify_unlinked(changes, listado)
     return {

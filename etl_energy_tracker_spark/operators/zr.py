@@ -23,39 +23,31 @@ one hash aggregate with map-side partials, decimal-exact power sums.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..pipelines.common import parse_european_number
 
 ZR_DIM_COLS = ["esios_id", "i90_id", "obsoleta", "potencia"]
 
-
-def read_up_export(spark: SparkSession, path: str) -> DataFrame:
-    """S-layer scan of the ESIOS UP export (';'-separated CSV with
-    header — ZR_tracking.py:112)."""
-    return spark.read.option("header", True).option("sep", ";").csv(path)
+# the REE BSP-aFRR listing's zone-name and zone-code columns
+BSP_ZONE_COL = "Descripción corta BSP-aFRR"
+BSP_CODE_COL = "Código BSP-aFRR"
 
 
-def esios_zone_aggregate(
-    up_df: DataFrame,
-    zona_col: str = "Zona de Regulación",
-    potencia_col: str = "Potencia máxima MW",
-    tipo_col: str = "Tipo de UP",
-    parse_potencia: bool = True,
-) -> DataFrame:
+def esios_zone_aggregate(up_df: DataFrame, parse_potencia: bool = True) -> DataFrame:
     """Generation zones with their total max power
-    (ZR_tracking.py:98-136): filter 'Generación' UPs, parse the
-    European-format power, round each to 2 dp, sum per trimmed zone.
-    Sums run decimal-exact (2-dp inputs), so the result is
-    reproducible regardless of partitioning."""
-    pot = F.col(potencia_col)
+    (ZR_tracking.py:98-136) from the ESIOS UP export columns: filter
+    'Generación' UPs, parse the European-format power, round each to
+    2 dp, sum per trimmed zone. Sums run decimal-exact (2-dp inputs),
+    so the result is reproducible regardless of partitioning."""
+    pot = F.col("Potencia máxima MW")
     if parse_potencia:
         pot = parse_european_number(pot)
     return (
-        up_df.where(F.col(tipo_col) == "Generación")
+        up_df.where(F.col("Tipo de UP") == "Generación")
         .select(
-            F.trim(F.col(zona_col)).alias("esios_id"),
+            F.trim(F.col("Zona de Regulación")).alias("esios_id"),
             F.round(pot, 2).cast("decimal(18,2)").alias("_pot"),
         )
         .groupBy("esios_id")
@@ -63,17 +55,13 @@ def esios_zone_aggregate(
     )
 
 
-def bsp_mapping(
-    bsp_df: DataFrame,
-    esios_col: str = "Descripción corta BSP-aFRR",
-    i90_col: str = "Código BSP-aFRR",
-) -> DataFrame:
+def bsp_mapping(bsp_df: DataFrame) -> DataFrame:
     """ESIOS zone name → I90 zone code from the REE BSP-aFRR listing
     (ZR_tracking.py:138-171), both sides trimmed."""
     return (
         bsp_df.select(
-            F.trim(F.col(esios_col)).alias("esios_id"),
-            F.trim(F.col(i90_col)).alias("i90_id"),
+            F.trim(F.col(BSP_ZONE_COL)).alias("esios_id"),
+            F.trim(F.col(BSP_CODE_COL)).alias("i90_id"),
         )
         .dropDuplicates(["esios_id"])
     )

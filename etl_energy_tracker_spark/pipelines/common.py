@@ -49,26 +49,20 @@ def drop_empty_rows(df: DataFrame, required: tuple[str, ...]) -> DataFrame:
 
 
 def standardize_datetime(
-    df: DataFrame,
-    dim: DataFrame,
-    fecha: str = "fecha",
-    hora: str = "hora",
-    granularity: str = "granularity",
-    value_col: str | None = None,
-    value_is_volume: bool = True,
+    df: DataFrame, dim: DataFrame, value_col: str | None = None
 ) -> DataFrame:
     """Mixed-granularity (fecha, hora) → canonical 15-min UTC grid.
 
-    Rows tagged hourly ('Hora') carry DST-suffixed hour labels, other
-    rows 1-based quarter indices; both become a quarter index for the
-    one conversion, then hourly rows expand ×4 (volumes ÷4, prices
-    replicate — etl_date_utils.py:826-863)."""
-    is_hourly = F.col(granularity) == "Hora"
-    idx = F.when(is_hourly, tg.hourly_quarter_idx(F.col(hora))).otherwise(
-        tg.parse_quarter_label(F.col(hora))
+    Rows whose ``granularity`` is hourly ('Hora') carry DST-suffixed
+    hour labels, other rows 1-based quarter indices; both become a
+    quarter index for the one conversion, then hourly rows expand ×4
+    with the volume ``value_col`` ÷4 (etl_date_utils.py:826-863)."""
+    is_hourly = F.col("granularity") == "Hora"
+    idx = F.when(is_hourly, tg.hourly_quarter_idx(F.col("hora"))).otherwise(
+        tg.parse_quarter_label(F.col("hora"))
     )
-    df = tg.with_utc_from_quarter(df, dim, fecha=fecha, quarter_idx=idx)
-    divide = (value_col,) if value_col and value_is_volume else ()
+    df = tg.with_utc_from_quarter(df, dim, quarter_idx=idx)
+    divide = (value_col,) if value_col else ()
     return tg.expand_hourly_to_15min(df, is_hourly, divide_cols=divide)
 
 

@@ -38,11 +38,7 @@ def transform(raw: DataFrame, dim: DataFrame, entity_raw: str = "Unidad de Progr
         .transform(classify_rtx)
         .withColumn("tipo", F.col("Redespacho"))
         .transform(lambda d: drop_zero_na(d, "volumenes"))
-        .transform(
-            lambda d: standardize_datetime(
-                d, dim, value_col="volumenes", value_is_volume=True
-            )
-        )
+        .transform(lambda d: standardize_datetime(d, dim, value_col="volumenes"))
         .withColumnRenamed(entity_raw, entity_out)
         .withColumn("id_mercado", F.lit(CURTAILMENT_MARKET_ID))
         .select("datetime_utc", entity_out, "RTx", "tipo", "volumenes", "id_mercado")

@@ -58,11 +58,7 @@ def transform_volumenes(
         df = map_programa_to_market(df)
     df = (
         df.transform(lambda d: drop_zero_na(d, "volumenes"))
-        .transform(
-            lambda d: standardize_datetime(
-                d, dim, value_col="volumenes", value_is_volume=True
-            )
-        )
+        .transform(lambda d: standardize_datetime(d, dim, value_col="volumenes"))
         .withColumnRenamed("Concepto", "tecnologia")
         .select("datetime_utc", "tecnologia", "volumenes", "id_mercado")
     )

@@ -20,7 +20,6 @@ from .common import drop_zero_na, standardize_datetime
 
 RENAMES = {
     "Unidad de Programación": "up",
-    "precios": "precio",
     "Tipo Transacción": "tipo_transaccion",
 }
 
@@ -37,13 +36,13 @@ def apply_market_filters(df: DataFrame, market_id: int) -> DataFrame:
     return df
 
 
-def finalize_columns(df: DataFrame, market_id: int, value_col: str) -> DataFrame:
+def finalize_columns(df: DataFrame, market_id: int) -> DataFrame:
     """P2 (_procesador_i90.py:211-233): rename to canonical names, keep
     tipo_transaccion when present. One projection."""
     source = {RENAMES.get(c, c): c for c in df.columns}
-    cols = [F.col(source.get(n, n)).alias(n) for n in ("datetime_utc", "up", value_col)]
+    cols = [F.col(source.get(n, n)).alias(n) for n in ("datetime_utc", "up", "volumenes")]
     cols.append(F.lit(market_id).alias("id_mercado"))
-    if "tipo_transaccion" in source and value_col == "volumenes":
+    if "tipo_transaccion" in source:
         cols.append(F.col(source["tipo_transaccion"]).alias("tipo_transaccion"))
     return df.select(*cols)
 
@@ -52,7 +51,6 @@ def exclude_error_dates(
     df: DataFrame,
     errors: DataFrame | None,
     sheet: str | None,
-    fecha_col: str = "fecha",
 ) -> DataFrame:
     """F10 wired into the ingest path (_descargador_i90.py:77-86,
     306-337; configs/i90_config.py:196-215): drop every row whose fecha
@@ -68,7 +66,7 @@ def exclude_error_dates(
         .distinct()
     )
     return df.join(
-        F.broadcast(bad), F.to_date(F.col(fecha_col)) == F.col("_bad_fecha"), "left_anti"
+        F.broadcast(bad), F.to_date(F.col("fecha")) == F.col("_bad_fecha"), "left_anti"
     )
 
 
@@ -84,81 +82,40 @@ def transform_volumenes(
         raw.transform(lambda d: exclude_error_dates(d, errors, sheet))
         .transform(lambda d: apply_market_filters(d, market_id))
         .transform(lambda d: drop_zero_na(d, "volumenes"))
-        .transform(
-            lambda d: standardize_datetime(
-                d, dim, value_col="volumenes", value_is_volume=True
-            )
-        )
-        .transform(lambda d: finalize_columns(d, market_id, "volumenes"))
+        .transform(lambda d: standardize_datetime(d, dim, value_col="volumenes"))
+        .transform(lambda d: finalize_columns(d, market_id))
     )
     dataset = "volumenes_i90_tipo" if "tipo_transaccion" in df.columns else "volumenes_i90"
     return validate(df, dataset)
 
 
-def transform_precios(
-    raw: DataFrame,
-    market_id: int,
-    dim: DataFrame,
-    errors: DataFrame | None = None,
-) -> DataFrame:
-    sheet = (m := MARKET_BY_ID.get(market_id)) and m.sheet_i90_precios
-    df = (
-        raw.transform(lambda d: exclude_error_dates(d, errors, sheet))
-        .transform(lambda d: apply_market_filters(d, market_id))
-        .transform(
-            lambda d: standardize_datetime(
-                d, dim, value_col="precios", value_is_volume=False
-            )
-        )
-        .withColumn("precios", F.round("precios", 2))
-        .transform(lambda d: finalize_columns(d, market_id, "precio"))
-    )
-    # precios table carries no entity column
-    return validate(df.select("datetime_utc", "id_mercado", "precio"), "precios")
-
-
-def diario_baseline(volumenes_diario: DataFrame) -> DataFrame:
-    """A2 (_procesador_i90.py:470-489): baseline = diario volumes with
-    tipo_transaccion=='Mercado', summed per (datetime_utc, up)."""
-    df = volumenes_diario
-    if "tipo_transaccion" in df.columns:
-        df = df.where(F.col("tipo_transaccion") == "Mercado")
-    return df.groupBy("datetime_utc", "up").agg(
-        F.sum("volumenes").alias("volumenes")
-    )
-
-
-def intra_incremental(
-    baseline: DataFrame, sessions: DataFrame, session_col: str = "session"
-) -> DataFrame:
+def intra_incremental(baseline: DataFrame, sessions: DataFrame) -> DataFrame:
     """W1/J4: cumulative intra programs → per-session increments.
 
-    `sessions` holds cumulative volumes with an integer session number
-    (2..8); the diario baseline is session 1. For each
+    `sessions` holds cumulative volumes with an integer ``session``
+    number (2..8); the diario baseline is session 1. For each
     (up, datetime_utc), increment = cumulative(n) − cumulative(n−1),
     where a missing n−1 row counts as 0 (_procesador_i90.py:525-537 —
     the reference left-joins session n onto n−1 and fills 0; the lag
     must therefore only look back exactly one session).
     """
     base = baseline.select(
-        "datetime_utc", "up", "volumenes", F.lit(1).alias(session_col)
+        "datetime_utc", "up", "volumenes", F.lit(1).alias("session")
     )
-    uni = sessions.select("datetime_utc", "up", "volumenes", session_col).unionByName(
-        base
-    )
-    w = W.partitionBy("up", "datetime_utc").orderBy(session_col)
+    uni = sessions.select("datetime_utc", "up", "volumenes", "session").unionByName(base)
+    w = W.partitionBy("up", "datetime_utc").orderBy("session")
     prev_vol = F.lag("volumenes").over(w)
-    prev_ses = F.lag(session_col).over(w)
+    prev_ses = F.lag("session").over(w)
     increment = F.col("volumenes") - F.when(
-        prev_ses == F.col(session_col) - 1, F.coalesce(prev_vol, F.lit(0.0))
+        prev_ses == F.col("session") - 1, F.coalesce(prev_vol, F.lit(0.0))
     ).otherwise(F.lit(0.0))
     return (
         uni.withColumn("vol_incr", increment)
-        .where(F.col(session_col) > 1)  # baseline rows are inputs, not outputs
+        .where(F.col("session") > 1)  # baseline rows are inputs, not outputs
         .select(
             "datetime_utc",
             "up",
             F.col("vol_incr").alias("volumenes"),
-            session_col,
+            "session",
         )
     )

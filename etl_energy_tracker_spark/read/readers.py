@@ -99,15 +99,12 @@ class PreciosReader:
         start: str | None = None,
         end: str | None = None,
         mercado_ids: list[int] | None = None,
-        columns: list[str] | None = None,
         granularity: str = "15min",
     ) -> DataFrame:
         if granularity not in ("15min", "hour"):
             raise ValueError(f"granularity must be '15min' or 'hour', got {granularity!r}")
         _validate_ids(mercado_ids)
-        df = self.lake.read_processed(
-            "precios", start=start, end=end, mercado_ids=mercado_ids, columns=columns
-        )
+        df = self.lake.read_processed("precios", start=start, end=end, mercado_ids=mercado_ids)
         if granularity == "hour":
             from .. import timegrid as tg
 
@@ -135,7 +132,6 @@ class VolumenesReader:
         end: str | None = None,
         mercados: list[str] | None = None,
         mercado_ids: list[int] | None = None,
-        columns: list[str] | None = None,
     ) -> DataFrame:
         if dataset not in self.DATASETS:
             raise ValueError(f"unknown volumenes dataset {dataset!r}")
@@ -149,7 +145,6 @@ class VolumenesReader:
             end=end,
             mercados=mercados,
             mercado_ids=mercado_ids,
-            columns=columns,
         )
 
 

@@ -97,8 +97,10 @@ def build_notification(
 ) -> dict[str, Any]:
     """Render the success/failure payload the reference emails
     (email_triggers.py:218-357): subject line with outcome marker,
-    per-stage status lines, and the failed-markets message when the
-    load stage carries one. Pure data — the sender renders/transports."""
+    per-stage status lines, the failed-markets message when the load
+    stage carries one, and one error line per failed market or error of
+    every other failed stage (a ``jobs.run_*`` status reports failures
+    per market). Pure data — the sender renders/transports."""
     ok = summary["overall_success"]
     lines = [
         f"{s}: {'ok' if summary[s]['success'] else 'FAILED'}" for s in STAGES
@@ -107,9 +109,14 @@ def build_notification(
     if fail_msg:
         lines.append(fail_msg)
     for s in STAGES:
-        err = (summary[s].get("details") or {}).get("error")
-        if err and not summary[s]["success"]:
-            lines.append(f"{s} error: {err}")
+        if summary[s]["success"]:
+            continue
+        details = summary[s].get("details") or {}
+        errors = [details["error"]] if details.get("error") else []
+        if s != "loading":  # the load stage's markets are in fail_msg
+            failed = details.get("markets_failed") or {}
+            errors += [f"{m}: {err}" for m, err in sorted(failed.items())]
+        lines += [f"{s} error: {err}" for err in errors]
     return {
         "severity": "success" if ok else "failure",
         "subject": f"{'Success' if ok else 'Failure'}: {pipeline} - {run_date}",

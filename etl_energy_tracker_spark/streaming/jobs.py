@@ -659,26 +659,22 @@ def conformal_band_alarm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_window_agg_stream(
     spark: SparkSession,
     sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
     output_mode: str = "complete",
 ) -> DataFrame:
     """Native Structured Streaming SESSION windows: per-user session
-    aggregation via ``session_window(ts, gap)`` — Spark merges events
-    whose event-time gap is < gap into one growing window (end = last
-    event + gap) inside the streaming state store, the engine-native
+    aggregation via ``session_window(ts, "30 minutes")`` — Spark merges
+    events whose event-time gap is < 30 minutes into one growing window
+    (end = last event + 30 minutes) inside the streaming state store, the engine-native
     upgrade of the batch lag+cumsum sessionization. ``complete`` mode
     is the synchronous oracle drive over the bounded source (the
     hourly_event_agg_stream convention); production uses ``append``
-    where the watermark closes and evicts finished sessions. The
+    where the 2-hour watermark closes and evicts finished sessions. The
     value sum goes through DECIMAL(38,6) so the emitted double is
     partition-order-independent (the streaming_hourly_agg recipe)."""
     agg = (
         events_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window("ts", gap), F.col("user_id")
-        )
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(38,6)"))
@@ -707,6 +703,9 @@ def session_window_agg_stream(
 # counter on any cross-batch reordering and could admit `limit`
 # extras). State stays O(_RL_KEEP) int64s per user, never O(history).
 _RL_KEEP = 8
+# events admitted per user in each epoch-aligned 10-minute window
+_RL_LIMIT = 3
+_RL_WINDOW_US = 600_000_000
 
 
 def _make_rate_limit_update(limit: int, window_us: int):
@@ -756,18 +755,13 @@ def _make_rate_limit_update(limit: int, window_us: int):
     return update
 
 
-def rate_limit_fixed_window_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    limit: int = 3,
-    window_us: int = 600_000_000,
-) -> DataFrame:
+def rate_limit_fixed_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user fixed-window admission control (rate limiter) via
     applyInPandasWithState: each user's GroupState holds a BOUNDED
     ring of the ``_RL_KEEP`` most recent (window_start, admitted)
     pairs plus running totals — still O(1) state, the canonical
     API-gateway / ingest-throttle shape. An event admits iff fewer
-    than ``limit`` events were admitted in its (epoch-aligned)
+    than ``_RL_LIMIT`` events were admitted in its (epoch-aligned)
     window. Keeping recent windows (not just the current one — the
     r11 judge finding) means an event landing in an already-seen
     earlier window across micro-batches resumes that window's true
@@ -778,13 +772,13 @@ def rate_limit_fixed_window_stream(
     approximation, unreachable under a watermark of
     _RL_KEEP*window). Events sort by (ts_us, event_id) within each
     batch. Over the static source the decisions equal the batch rank
-    rule row_number per (user, window) <= limit — the exact SQL
+    rule row_number per (user, window) <= _RL_LIMIT — the exact SQL
     oracle."""
     ev = events_stream(spark, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
     out = ev.groupBy("user_id").applyInPandasWithState(
-        _make_rate_limit_update(limit, window_us),
+        _make_rate_limit_update(_RL_LIMIT, _RL_WINDOW_US),
         outputStructType=(
             "user_id long, n_events long, n_admitted long, "
             "n_rejected long"

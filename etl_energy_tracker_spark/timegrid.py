@@ -227,26 +227,18 @@ def expand_hourly_to_15min(
 
 def rollup_15min_to_hourly(
     df: DataFrame,
-    ts_col: str = "datetime_utc",
     group_cols: tuple[str, ...] = (),
     mean_cols: tuple[str, ...] = (),
-    sum_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """15-min → hourly: truncate to hour, numeric→mean (prices) or sum
-    (energy), ids grouped. Reference: etl_date_utils.py:866-937."""
-    aggs = [F.avg(c).alias(c) for c in mean_cols] + [F.sum(c).alias(c) for c in sum_cols]
-    return (
-        df.groupBy(F.date_trunc("hour", ts_col).alias(ts_col), *group_cols)
-        .agg(*aggs)
-    )
+    """15-min → hourly prices: truncate ``datetime_utc`` to the hour,
+    mean of each price column, ids grouped. Reference:
+    etl_date_utils.py:866-937."""
+    hour = F.date_trunc("hour", "datetime_utc").alias("datetime_utc")
+    return df.groupBy(hour, *group_cols).agg(*[F.avg(c).alias(c) for c in mean_cols])
 
 
-def with_local_labels(
-    df: DataFrame,
-    dim: DataFrame,
-    ts_col: str = "datetime_utc",
-) -> DataFrame:
-    """Inverse kernel: UTC instant → Madrid local (fecha, hourly label
+def with_local_labels(df: DataFrame, dim: DataFrame) -> DataFrame:
+    """Inverse kernel: UTC ``datetime_utc`` → Madrid local (fecha, hourly label
     with DST suffix, 1-based quarter index) — what a writer producing
     reference-shaped raw files needs (the exact inverse of
     with_utc_from_quarter with either index).
@@ -255,7 +247,7 @@ def with_local_labels(
     occurrence, CEST) or '02-03b' (second, CET), disambiguated by the
     UTC hour; all other labels follow directly from the local wall
     clock. The quarter index is elapsed time since local midnight."""
-    local = F.from_utc_timestamp(F.col(ts_col), "Europe/Madrid")
+    local = F.from_utc_timestamp(F.col("datetime_utc"), "Europe/Madrid")
     d = dim.select(
         F.col("fecha").alias("_dim_fecha"), "day_type", "day_start_offset"
     )
@@ -266,7 +258,7 @@ def with_local_labels(
     h = F.hour("_local")
     ambiguous = (F.col("day_type") == DAY_FALL_BACK) & (h == 2)
     suffix = F.when(
-        ambiguous, F.when(F.hour(ts_col) == 0, F.lit("a")).otherwise(F.lit("b"))
+        ambiguous, F.when(F.hour("datetime_utc") == 0, F.lit("a")).otherwise(F.lit("b"))
     ).otherwise(F.lit(""))
     hora = F.concat(
         F.lpad(h.cast("string"), 2, "0"),
@@ -278,7 +270,7 @@ def with_local_labels(
         hours=F.col("day_start_offset")
     )
     quarter_idx = (
-        (F.unix_micros(F.col(ts_col)) - F.unix_micros(local_midnight_utc))
+        (F.unix_micros(F.col("datetime_utc")) - F.unix_micros(local_midnight_utc))
         / 900_000_000
     ).cast("int") + 1
     return (

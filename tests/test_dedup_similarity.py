@@ -163,6 +163,20 @@ def test_connected_components_long_chain(spark):
     assert set(got.values()) == {100} and len(got) == 12
 
 
+def test_connected_components_round_bound_raises(spark):
+    """A 30-node path needs more label-propagation rounds than the
+    20-round bound: label-prop raises instead of returning partial
+    labels, and star converges on the same edges."""
+    from etl_energy_tracker_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(29)], "a long, b long")
+    with pytest.raises(RuntimeError, match=r"label-prop.*20 rounds"):
+        connected_components(edges, "a", "b").collect()
+    got = {r["node"]: r["component"]
+           for r in connected_components(edges, "a", "b", algorithm="star").collect()}
+    assert set(got.values()) == {0} and len(got) == 30
+
+
 @pytest.mark.slow
 def test_keep_corpus_retains_exactly_keepers(spark):
     """Dropped docs are precisely the non-keeper cluster members; every

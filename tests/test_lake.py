@@ -427,3 +427,53 @@ def test_omie_i3_jobs(spark, tmp_path):
     st = jobs.run_i3_volumenes_etl(spark, lake, raw_i3, mode="latest")
     assert st["success"], st
     assert lake.read_processed("volumenes_i3").count() == 1
+
+
+def test_curtailment_job(spark, tmp_path):
+    """run_curtailment_etl through the job runner: the Bajar/RT1 row
+    lands in curtailments_i90 under the curtailment market id."""
+    import etl_energy_tracker_spark.jobs as jobs
+    from etl_energy_tracker_spark.lake import Lake
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    raw = spark.createDataFrame(
+        [
+            ("2024-01-15", "1", "Quince minutos", 8.0, "ABO3", "Bajar", "UPLPVPV"),
+            ("2024-01-15", "1", "Quince minutos", 8.0, "ABO3", "Subir", "UPLPVPV"),
+        ],
+        "fecha string, hora string, granularity string, volumenes double, "
+        "`Unidad de Programación` string, Sentido string, Redespacho string",
+    )
+    st = jobs.run_curtailment_etl(spark, lake, raw, mode="single", start="2024-01-15")
+    assert st == {
+        "success": True,
+        "details": {
+            "dataset": "curtailments_i90", "markets_processed": [13], "markets_failed": {}
+        },
+    }
+    got = [
+        (r["up"], r["RTx"], r["tipo"], r["volumenes"], r["id_mercado"])
+        for r in lake.read_processed("curtailments_i90").collect()
+    ]
+    assert got == [("ABO3", "R1", "UPLPVPV", 8.0, 13)]
+
+
+def test_jobs_report_failures_per_market(spark, tmp_path):
+    """A failing job returns the loader's status shape with the error
+    under each of its markets, never a bare ``error`` and never a raise."""
+    import etl_energy_tracker_spark.jobs as jobs
+    from etl_energy_tracker_spark.lake import Lake
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    raw = spark.createDataFrame(
+        [("2024-01-01T00:00:00Z", 10.0)], "datetime_utc string, value double"
+    )
+    st = jobs.run_esios_precios_etl(spark, lake, raw, mode="no-such-mode")
+    assert st["success"] is False
+    assert st["details"]["dataset"] == "precios"
+    assert st["details"]["markets_processed"] == []
+    assert st["details"]["markets_failed"][0].startswith("ValueError: unknown mode")
+
+    st = jobs.run_i90_volumenes_etl(spark, lake, raw, [1, 2], mode="no-such-mode")
+    assert st["success"] is False
+    assert sorted(st["details"]["markets_failed"]) == [1, 2]
