@@ -76,7 +76,7 @@ MARKETS: tuple[Market, ...] = (
 MARKET_BY_ID: dict[int, Market] = {m.id: m for m in MARKETS}
 MARKET_BY_NAME: dict[str, Market] = {m.name: m for m in MARKETS}
 
-# indicador → id_mercado broadcast map (J1, _procesador_esios.py:159-188)
+# indicador → id_mercado literal map (J1, _procesador_esios.py:159-188)
 INDICATOR_TO_MARKET: dict[int, int] = {
     m.indicador_esios: m.id for m in MARKETS if m.indicador_esios
 }
@@ -188,11 +188,6 @@ def markets_df(spark: SparkSession) -> DataFrame:
         "indicador_esios int, sheet_i90_volumenes string, "
         "sheet_i90_precios string, is_quinceminutal boolean, sentido string",
     )
-
-
-def indicator_map_df(spark: SparkSession) -> DataFrame:
-    rows = [(ind, mid) for ind, mid in INDICATOR_TO_MARKET.items()]
-    return local_frame(spark, rows, "indicador_id int, id_mercado smallint")
 
 
 def tecnologias_df(spark: SparkSession) -> DataFrame:

@@ -27,11 +27,10 @@ from pyspark.sql import types as T
 from ..functions.hashing import MOD
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns (left fold, 0.0 seed).
 
-    ``dim`` (the arrays' static width) is accepted for documentation at
-    call sites but deliberately unused: an unrolled explicit-sum
+    The fold is width-agnostic on purpose: an unrolled explicit-sum
     variant (64 GetArrayItem multiply-add terms, bit-identical fold
     order) was tried in r12 and REVERTED — the giant expression trees
     made every consumer 3-5x SLOWER end to end (planning + codegen
@@ -45,12 +44,10 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def with_norm(
-    df: DataFrame, vec_col: str, out: str = "norm", dim: int | None = None
-) -> DataFrame:
+def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
     """Precompute the L2 norm once per vector — pair-scoring then needs
     only the dot product (one fold per pair instead of three)."""
-    return df.withColumn(out, F.sqrt(dot(F.col(vec_col), F.col(vec_col), dim)))
+    return df.withColumn(out, F.sqrt(dot(F.col(vec_col), F.col(vec_col))))
 
 
 def brute_force_topk(
@@ -66,17 +63,17 @@ def brute_force_topk(
     # expression on the same input, multiplied in the same order)
     q = with_norm(
         queries.select(F.col(query_id).alias("query_id"), F.col("embedding").alias("qv")),
-        "qv", "qn", dim=64,
+        "qv", "qn",
     )
     c = with_norm(
         corpus.select(F.col(corpus_id).alias("corpus_id"), F.col("embedding").alias("cv")),
-        "cv", "cn", dim=64,
+        "cv", "cn",
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
         "cosine",
         F.round(
             F.try_divide(
-                dot(F.col("qv"), F.col("cv"), 64), F.col("qn") * F.col("cn")
+                dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
             ),
             6,
         ),
@@ -146,7 +143,6 @@ def lsh_topk(
         ),
         "qv",
         "qn",
-        dim=64,
     )
     c = with_norm(
         with_lsh_bucket(
@@ -156,12 +152,11 @@ def lsh_topk(
         ),
         "cv",
         "cn",
-        dim=64,
     )
     scored = c.join(F.broadcast(q), "bucket").withColumn(
         "cosine",
         F.round(
-            F.try_divide(dot(F.col("qv"), F.col("cv"), 64), F.col("qn") * F.col("cn")), 6
+            F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")), 6
         ),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "corpus_id")
@@ -345,7 +340,6 @@ def with_ivf_cell(
     vec_col: str,
     id_col: str,
     n_probe: int = 1,
-    dim: int | None = 64,
 ) -> DataFrame:
     """IVF cell assignment: nearest ``n_probe`` centroids by cosine, as
     the ``cell`` column.
@@ -376,19 +370,19 @@ def with_ivf_cell(
                     "join it back on the id after assignment"
                 )
     cents = centroids.withColumn(
-        "_cn", F.sqrt(dot(F.col("cv"), F.col("cv"), dim))
+        "_cn", F.sqrt(dot(F.col("cv"), F.col("cv")))
     )
     # vector norm hoisted out of the cross join: one fold per row, not
     # one per (row, centroid); same doubles, multiplied in the same
     # order as the original sqrt(v.v) * sqrt(c.c)
-    base = df.withColumn("_vn", F.sqrt(dot(F.col(vec_col), F.col(vec_col), dim)))
+    base = df.withColumn("_vn", F.sqrt(dot(F.col(vec_col), F.col(vec_col))))
     scored = base.crossJoin(F.broadcast(cents)).withColumn(
         "_sim",
         # try_divide: zero-norm rows get NULL similarity and fall to the
         # bottom of the DESC (NULLS LAST) ranking instead of erroring
         F.round(
             F.try_divide(
-                dot(F.col(vec_col), F.col("cv"), dim),
+                dot(F.col(vec_col), F.col("cv")),
                 F.col("_vn") * F.col("_cn"),
             ),
             6,
@@ -461,7 +455,7 @@ def with_ivf_cell_mapside(
     ]
     cents = F.array(*structs)
     v = F.col(vec_col)
-    vnorm = F.sqrt(dot(v, v, 64))
+    vnorm = F.sqrt(dot(v, v))
     # transform() computes each centroid similarity ONCE; the fold then
     # only compares struct fields (a when-condition that recomputed the
     # dot product would double the O(k·dim) projection cost). The pair
@@ -471,7 +465,7 @@ def with_ivf_cell_mapside(
     sims = F.transform(
         cents,
         lambda c: F.struct(
-            F.round(F.try_divide(dot(v, c["cv"], 64), vnorm * c["cnorm"]), 6).alias("sim"),
+            F.round(F.try_divide(dot(v, c["cv"]), vnorm * c["cnorm"]), 6).alias("sim"),
             c["cid"].alias("cid"),
         ),
     )
@@ -538,16 +532,16 @@ def train_ivf_codebook(
         scored = vectors.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vv")
         ).withColumn(
-            "_vn", F.sqrt(dot(F.col("vv"), F.col("vv"), 64))
+            "_vn", F.sqrt(dot(F.col("vv"), F.col("vv")))
         ).crossJoin(
             F.broadcast(
-                cent.withColumn("_cn", F.sqrt(dot(F.col("cv"), F.col("cv"), 64)))
+                cent.withColumn("_cn", F.sqrt(dot(F.col("cv"), F.col("cv"))))
             )
         ).withColumn(
             "_sim",
             F.round(
                 F.try_divide(
-                    dot(F.col("vv"), F.col("cv"), 64), F.col("_vn") * F.col("_cn")
+                    dot(F.col("vv"), F.col("cv")), F.col("_vn") * F.col("_cn")
                 ),
                 6,
             ),
@@ -583,13 +577,13 @@ def ivf_topk(
     c = corpus.select(F.col(corpus_id).alias("corpus_id"), F.col("embedding").alias("ev"))
     q_cells = with_ivf_cell(q, centroids, "qv", "query_id", n_probe=n_probe)
     c_cells = with_norm(
-        with_ivf_cell(c, centroids, "ev", "corpus_id", n_probe=1), "ev", "cn", dim=64
+        with_ivf_cell(c, centroids, "ev", "corpus_id", n_probe=1), "ev", "cn"
     )
-    q_cells = with_norm(q_cells, "qv", "qn", dim=64)
+    q_cells = with_norm(q_cells, "qv", "qn")
     scored = c_cells.join(F.broadcast(q_cells), "cell").withColumn(
         "cosine",
         F.round(
-            F.try_divide(dot(F.col("qv"), F.col("ev"), 64), F.col("qn") * F.col("cn")),
+            F.try_divide(dot(F.col("qv"), F.col("ev")), F.col("qn") * F.col("cn")),
             6,
         ),
     )

@@ -4,8 +4,8 @@ TransformadorESIOS/ESIOSProcessor.transform_price_data
 rounding → hourly→15-min expansion via the time kernel → finalize.
 
 The whole pipeline is one lazy DataFrame chain; the only action is the
-lake upsert. Dims broadcast; the fact side never shuffles except for
-the final write layout."""
+lake upsert. The market map is a literal expression, not a join; the
+fact side never shuffles except for the final write layout."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ from .. import timegrid as tg
 from ..config.market_config import (
     ESIOS_GEO_ALLOWED,
     ESIOS_GEO_FILTER_INDICATORS,
-    indicator_map_df,
+    INDICATOR_TO_MARKET,
 )
 from ..schemas import validate
 
@@ -28,15 +28,19 @@ def geo_filter(df: DataFrame) -> DataFrame:
     return df.where(~needs | F.col("geo_name").isin(list(ESIOS_GEO_ALLOWED)))
 
 
-def map_market_id(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """J1 (_procesador_esios.py:159-188): indicador → id_mercado via
-    broadcast inner join; unmatched indicators are dropped after the
-    geo filter the way the reference raises (a lazy raise_error guard
-    would also work; the inner join keeps the plan total)."""
-    dim = indicator_map_df(spark)
-    return df.join(
-        F.broadcast(dim), df.indicador_id.cast("int") == dim.indicador_id, "inner"
-    ).drop("indicador_id")
+def map_market_id(df: DataFrame) -> DataFrame:
+    """J1 (_procesador_esios.py:159-188): indicador → id_mercado through
+    a literal map (a static config, so no dimension frame and no
+    broadcast); rows whose indicator has no market are dropped after
+    the geo filter, as an inner join with the map would drop them."""
+    market = F.create_map(
+        *[x for ind, mid in INDICATOR_TO_MARKET.items() for x in (F.lit(ind), F.lit(mid))]
+    )[F.col("indicador_id").cast("int")]
+    return (
+        df.withColumn("id_mercado", market.cast("smallint"))
+        .where(F.col("id_mercado").isNotNull())
+        .drop("indicador_id")
+    )
 
 
 def transform_price_data(spark: SparkSession, raw: DataFrame) -> DataFrame:
@@ -45,7 +49,7 @@ def transform_price_data(spark: SparkSession, raw: DataFrame) -> DataFrame:
         raw.transform(geo_filter)
         .withColumn("datetime_utc", F.to_timestamp("datetime_utc"))
         .withColumn("precio", F.round(F.col("value"), 2))
-        .transform(lambda d: map_market_id(d, spark))
+        .transform(map_market_id)
         # hourly prices replicate onto the 15-min grid, never divide
         # (_procesador_esios.py:190-231); 15-min rows pass through
         .transform(lambda d: tg.expand_hourly_to_15min(d, F.col("granularidad") == "Hora"))

@@ -290,14 +290,14 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ev"),
         "cell",
         F.sqrt(
-            _sdot(F.col("embedding"), F.col("embedding"), 64)
+            _sdot(F.col("embedding"), F.col("embedding"))
         ).alias("_n"),
     ).localCheckpoint(eager=False)
     a = assigned.alias("a")
     b = assigned.alias("b")
 
     cos = F.round(
-        _sdot(F.col("a.ev"), F.col("b.ev"), 64)
+        _sdot(F.col("a.ev"), F.col("b.ev"))
         / (F.col("a._n") * F.col("b._n")),
         6,
     )

@@ -18,24 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.hashing import duckdb_charhash
+from ..operators.similarity import dot
 from ..sources.registry import load_table
 from .catalog import register
 
 _N_QUERIES = 5
 _TOP_K = 10
-
-
-def _dot(a, b, dim: int | None = None):
-    """Dot product (left fold, 0.0 seed). ``dim`` is accepted for
-    call-site documentation but unused: the unrolled explicit-sum
-    variant was tried in r12 and REVERTED — 64-term expression trees
-    made consumers 3-5x slower end to end (see operators/similarity.dot
-    and OPTIMIZATION_r12.md)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 @register(
@@ -85,14 +73,14 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norms hoisted out of the cross join (one fold per row, not three
     # per pair); the divisor is the same sqrt(q.q) * sqrt(c.c) product
     # in the same order, so every double is bit-identical
-    q = q.withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv"), 64)))
-    c = c.withColumn("cn", F.sqrt(_dot(F.col("cv"), F.col("cv"), 64)))
+    q = q.withColumn("qn", F.sqrt(dot(F.col("qv"), F.col("qv"))))
+    c = c.withColumn("cn", F.sqrt(dot(F.col("cv"), F.col("cv"))))
     scored = (
         c.crossJoin(F.broadcast(q))
         .withColumn(
             "cosine",
             F.round(
-                _dot(F.col("qv"), F.col("cv"), 64) / (F.col("qn") * F.col("cn")),
+                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
                 6,
             ),
         )
@@ -199,7 +187,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    norm = F.sqrt(_dot(F.col("embedding"), F.col("embedding"), 64))
+    norm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.round(F.avg(norm), 4).alias("avg_norm"),
@@ -697,7 +685,7 @@ _HN_DUP_CUT = 0.95   # cosine >= this is a near-duplicate, not a negative
     "final top-k is one window over candidates, not corpus rows.",
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import dot, with_ivf_cell, with_norm
+    from ..operators.similarity import with_ivf_cell, with_norm
     from ..sources.registry import load_table_split
 
     emb = load_table_split(spark, "embeddings", sf_dir)
@@ -1030,16 +1018,16 @@ def ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Ties (rounded s) go to the lowest centroid_id and an all-NULL row
     # keeps a NULL sim_micro, exactly like the DESC NULLS LAST window.
     scored = emb.withColumn(
-        "_vn", F.sqrt(_dot(F.col("embedding"), F.col("embedding"), 64))
+        "_vn", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
     ).crossJoin(
         F.broadcast(
-            cent.withColumn("_cn", F.sqrt(_dot(F.col("cv"), F.col("cv"), 64)))
+            cent.withColumn("_cn", F.sqrt(dot(F.col("cv"), F.col("cv"))))
         )
     ).withColumn(
         "s",
         F.round(
             F.try_divide(
-                _dot(F.col("embedding"), F.col("cv"), 64),
+                dot(F.col("embedding"), F.col("cv")),
                 F.col("_vn") * F.col("_cn"),
             ),
             6,
@@ -1187,15 +1175,15 @@ def kcenter_coreset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def dist_to(cv_list) -> F.Column:
         # identical per-pair arithmetic to the former crossJoin shape:
-        # _dot is a left fold, so the Python-side norm (left-to-right
-        # sum of squares) reproduces sqrt(_dot(cv, cv)) bit-for-bit
+        # dot is a left fold, so the Python-side norm (left-to-right
+        # sum of squares) reproduces sqrt(dot(cv, cv)) bit-for-bit
         # (the facility_location_select precedent).
         cv = F.array(*[F.lit(float(x)) for x in cv_list])
         cn = math.sqrt(sum(float(x) ** 2 for x in cv_list))
         s = F.round(
             F.try_divide(
-                _dot(F.col("embedding"), cv, 64),
-                F.sqrt(_dot(F.col("embedding"), F.col("embedding"), 64))
+                dot(F.col("embedding"), cv),
+                F.sqrt(dot(F.col("embedding"), F.col("embedding")))
                 * F.lit(cn),
             ),
             6,
@@ -1361,7 +1349,7 @@ def facility_location_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = sorted(cent.collect(), key=lambda r: r["cid"])  # bounded: k x dim
     cids = [int(r["cid"]) for r in rows]
     v = F.col("embedding")
-    vnorm = F.sqrt(_dot(v, v, 64))
+    vnorm = F.sqrt(dot(v, v))
     sims = F.array(
         *[
             F.coalesce(
@@ -1378,7 +1366,7 @@ def facility_location_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv = F.array(*[F.lit(float(x)) for x in r["cv"]])
         cnorm = math.sqrt(sum(float(x) ** 2 for x in r["cv"]))
         scored = scored.withColumn(
-            f"s{i}", F.round(F.try_divide(_dot(v, cv, 64), vnorm * F.lit(cnorm)), 6)
+            f"s{i}", F.round(F.try_divide(dot(v, cv), vnorm * F.lit(cnorm)), 6)
         )
     vstate = scored.select("vec_id", sims.alias("sims")).localCheckpoint(
         eager=False
@@ -1530,7 +1518,7 @@ def mmr_diverse_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.withColumn(
             "r6",
             F.round(
-                F.try_divide(_dot(v, qv, 64), F.sqrt(_dot(v, v, 64)) * F.lit(qnorm)), 6
+                F.try_divide(dot(v, qv), F.sqrt(dot(v, v)) * F.lit(qnorm)), 6
             ),
         )
         .select("vec_id", "embedding", rel.alias("rel"))
@@ -1699,15 +1687,15 @@ def contrastive_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # norms hoisted out of the pair join (one fold per row instead of
     # two per pair; same doubles multiplied in the same order)
-    a = a.withColumn("_an", F.sqrt(_dot(F.col("av"), F.col("av"), 64)))
-    b = b.withColumn("_bn", F.sqrt(_dot(F.col("bv"), F.col("bv"), 64)))
+    a = a.withColumn("_an", F.sqrt(dot(F.col("av"), F.col("av"))))
+    b = b.withColumn("_bn", F.sqrt(dot(F.col("bv"), F.col("bv"))))
     pairs = (
         a.join(b, (a.cell == b.bcell) & (a.al != b.bl))
         .withColumn(
             "s6",
             F.round(
                 F.try_divide(
-                    _dot(F.col("av"), F.col("bv"), 64),
+                    dot(F.col("av"), F.col("bv")),
                     F.col("_an") * F.col("_bn"),
                 ),
                 6,
@@ -1866,12 +1854,12 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             cent_rows, "cid long, cv array<double>, cn double"
         )
         scored = qe.withColumn(
-            "_qn", F.sqrt(_dot(F.col("q"), F.col("q"), ndim))
+            "_qn", F.sqrt(dot(F.col("q"), F.col("q")))
         ).crossJoin(F.broadcast(cent_df)).withColumn(
             "_sim",
             F.round(
                 F.try_divide(
-                    _dot(F.col("q"), F.col("cv"), ndim),
+                    dot(F.col("q"), F.col("cv")),
                     F.col("_qn") * F.col("cn"),
                 ),
                 6,
@@ -2217,12 +2205,12 @@ def cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         emb.select("vec_id", "label", "embedding")
         .withColumn(
-            "_vn", F.sqrt(_dot(F.col("embedding"), F.col("embedding"), 64))
+            "_vn", F.sqrt(dot(F.col("embedding"), F.col("embedding")))
         )
         .crossJoin(
             F.broadcast(
                 cent.withColumn(
-                    "_cn", F.sqrt(_dot(F.col("cv"), F.col("cv"), 64))
+                    "_cn", F.sqrt(dot(F.col("cv"), F.col("cv")))
                 )
             )
         )
@@ -2230,7 +2218,7 @@ def cluster_purity_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_sim",
             F.round(
                 F.try_divide(
-                    _dot(F.col("embedding"), F.col("cv"), 64),
+                    dot(F.col("embedding"), F.col("cv")),
                     F.col("_vn") * F.col("_cn"),
                 ),
                 6,
@@ -2415,16 +2403,16 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # norms hoisted out of the cross join (one fold per token row, not
     # two per pair; same doubles multiplied in the same order)
-    q = q.withColumn("nq", F.sqrt(_dot(F.col("qv"), F.col("qv"), _MS_SUB)))
-    d = d.withColumn("nd", F.sqrt(_dot(F.col("dv"), F.col("dv"), _MS_SUB)))
-    dot = _dot(F.col("qv"), F.col("dv"), _MS_SUB)
+    q = q.withColumn("nq", F.sqrt(dot(F.col("qv"), F.col("qv"))))
+    d = d.withColumn("nd", F.sqrt(dot(F.col("dv"), F.col("dv"))))
+    qd = dot(F.col("qv"), F.col("dv"))
     cos_micro = F.expr(
         "CAST(FLOOR(cos_d * CAST(1000000 AS DOUBLE) "
         "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
     )
     sims = (
         d.crossJoin(F.broadcast(q))
-        .withColumn("cos_d", dot / (F.col("nq") * F.col("nd")))
+        .withColumn("cos_d", qd / (F.col("nq") * F.col("nd")))
         .select("query_id", "doc_id", "qt", cos_micro.alias("cos_micro"))
     )
     best = sims.groupBy("query_id", "doc_id", "qt").agg(

@@ -288,8 +288,8 @@ def test_ivf_cell_rejects_unorderable_payload(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id int, cv array<double>"
     )
     with pytest.raises(TypeError, match="'tags'.*map<string,int>"):
-        similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=1, dim=2)
-    cells = similarity.with_ivf_cell(df.drop("tags"), cents, "v", "vid", n_probe=1, dim=2)
+        similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=1)
+    cells = similarity.with_ivf_cell(df.drop("tags"), cents, "v", "vid", n_probe=1)
     assert {(r.vid, r.cell) for r in cells.collect()} == {(1, 0), (2, 1)}
-    probed = similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=2, dim=2)
+    probed = similarity.with_ivf_cell(df, cents, "v", "vid", n_probe=2)
     assert probed.count() == 4

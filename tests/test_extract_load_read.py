@@ -565,7 +565,6 @@ def test_etl_frame_builders_start_no_python_worker(spark):
         "bsp list": ts.parse_bsp_list(spark, bsp_grid),
         "i90 errores": mc.i90_errores_df(spark, (mc.I90Error("2024-01-15", "03"),)),
         "markets": mc.markets_df(spark),
-        "indicator map": mc.indicator_map_df(spark),
         "tecnologias": mc.tecnologias_df(spark),
     }
     assert [name for name, df in frames.items() if not _python_free(df)] == []

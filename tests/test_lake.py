@@ -405,6 +405,98 @@ def test_compaction_plan_parallelism(spark, lake):
     assert "SinglePartition" not in plan_str
 
 
+JAN_I90 = "mercado=diario/id_mercado=1/year=2024/month=1"
+
+
+def _i90(spark, rows):
+    return spark.createDataFrame(
+        rows, "datetime_utc timestamp_ntz, up string, volumenes double, id_mercado int"
+    )
+
+
+def _i90_rows(n, volume):
+    # few distinct units over many rows, as a daily delivery has them
+    return [(T0 + dt.timedelta(minutes=15 * i), f"UP{i % 3}", i * volume, 1) for i in range(n)]
+
+
+def _assert_reference_layout(leaf):
+    """Every file in ``leaf`` has the reference's layout: no dictionary
+    on the time, value and sequence columns, delta-coded int64 columns,
+    dictionary-coded strings, and ``_ingest_seq`` min/max statistics."""
+    files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
+    assert files
+    for name in files:
+        md = pq.read_metadata(os.path.join(leaf, name))
+        for i in range(md.num_row_groups):
+            for j in range(md.num_columns):
+                c = md.row_group(i).column(j)
+                where = f"{name}:{c.path_in_schema}"
+                if c.path_in_schema in ("datetime_utc", "volumenes", "_ingest_seq"):
+                    assert not c.has_dictionary_page, where
+                if c.physical_type == "INT64":
+                    assert "DELTA_BINARY_PACKED" in c.encodings, where
+                if c.physical_type == "BYTE_ARRAY":
+                    assert "RLE_DICTIONARY" in c.encodings, where
+                if c.path_in_schema == "_ingest_seq":
+                    assert c.statistics is not None and c.statistics.has_min_max, where
+
+
+@pytest.mark.parametrize("writer", ["merging_upsert", "write_raw", "compact_processed"])
+def test_writers_use_reference_layout(spark, lake, writer):
+    """The one writer behind both zones writes v2 pages (int64 columns
+    delta-coded) and a dictionary on string columns only; the rule
+    comes from the frame's schema."""
+    batch = _i90(spark, _i90_rows(200, 1.37))
+    if writer == "write_raw":
+        raw = batch.drop("id_mercado").withColumns({"year": F.lit(2024), "month": F.lit(1)})
+        lake.write_raw(raw, "diario", "volumenes_i90")
+        leaf = os.path.join(lake.raw_path("diario", "volumenes_i90"), "year=2024/month=1")
+    else:
+        lake.upsert_processed(batch, "volumenes_i90")
+        root = lake.processed_path("volumenes_i90")
+        if writer == "merging_upsert":
+            lake.upsert_processed(_i90(spark, _i90_rows(50, 2.0)), "volumenes_i90")
+        else:
+            _fragment_leaf(root, JAN_I90, copies=1)
+            assert lake_mod.compact_processed(lake, "volumenes_i90") == 1
+        leaf = os.path.join(root, JAN_I90)
+    _assert_reference_layout(leaf)
+
+
+def test_merge_rewrites_parent_layout_leaf(spark, lake):
+    """A leaf written in the earlier layout (v1 pages, a dictionary on
+    every column) merges like any other: keep-last holds, the next
+    ``_ingest_seq`` continues from its footers, and the rewritten leaf
+    has the reference layout."""
+    leaf = os.path.join(lake.processed_path("volumenes_i90"), JAN_I90)
+    os.makedirs(leaf)
+    pq.write_table(
+        pa.table({
+            "datetime_utc": pa.array([T0, T1], pa.timestamp("us")),
+            "up": pa.array(["UP1", "UP1"]),
+            "volumenes": pa.array([5.0, 6.0], pa.float32()),
+            "_ingest_seq": pa.array([2, 5], pa.int64()),
+        }),
+        os.path.join(leaf, "part-old.parquet"),
+        use_dictionary=True,
+        data_page_version="1.0",
+        write_statistics=True,
+    )
+    old = pq.read_metadata(os.path.join(leaf, "part-old.parquet"))
+    assert old.row_group(0).column(0).has_dictionary_page
+
+    lake.upsert_processed(_i90(spark, [(T0, "UP1", 5.0, 1), (T1, "UP1", 7.0, 1)]), "volumenes_i90")
+    got = {
+        (r["datetime_utc"], r["volumenes"], r["_ingest_seq"])
+        for r in lake.read_processed(
+            "volumenes_i90", columns=["datetime_utc", "volumenes", "_ingest_seq"]
+        ).collect()
+    }
+    assert got == {(T0, 5.0, 6), (T1, 6.0, 5), (T1, 7.0, 6)}
+    assert "part-old.parquet" not in os.listdir(leaf)
+    _assert_reference_layout(leaf)
+
+
 def test_omie_i3_jobs(spark, tmp_path):
     import etl_energy_tracker_spark.jobs as jobs
     from etl_energy_tracker_spark.lake import Lake

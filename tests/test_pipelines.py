@@ -33,7 +33,7 @@ def test_esios_pipeline(spark):
             ("2024-01-15T10:00:00Z", 40.0, "600", "Portugal", "Hora"),
             # secundaria subir (2130): native 15-min, geo filter not applied
             ("2024-01-15T10:15:00Z", 12.5, "2130", "Portugal", "Quince minutos"),
-            # unknown indicator dropped by the map join
+            # unknown indicator: no market, so the row is dropped
             ("2024-01-15T10:00:00Z", 1.0, "99999", "España", "Hora"),
         ],
         "datetime_utc string, value double, indicador_id string, geo_name string, granularidad string",
