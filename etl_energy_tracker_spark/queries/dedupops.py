@@ -349,8 +349,9 @@ _JACCARD_EDGES_SQL = f"""
     tags=("dedup", "text", "iterative"),
     doc="Near-dup cluster resolution — the step after pair generation "
     "that a real dedup pipeline needs: connected components over the "
-    "Jaccard>=0.5 pair graph (distributed min-label propagation, one "
-    "join+groupBy per round, rounds = graph diameter), keeper = min "
+    "Jaccard>=0.5 pair graph (large-star/small-star, Kiveris et al. "
+    "SoCC'14: O(log² n) rounds whatever the graph diameter, so long "
+    "duplicate chains cost a few rounds), keeper = min "
     "doc_id per component. Oracle is an independent formulation: a "
     "DuckDB recursive CTE computing reachability labels.",
 )
@@ -359,45 +360,6 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ngram_jaccard_pairs(spark, sf_dir)
     comp = dedup.connected_components(pairs, "doc_a", "doc_b")
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component",
-        (F.col("component") == F.col("node")).alias("is_keeper"),
-    )
-
-
-@register(
-    "near_dup_clusters_star",
-    oracle=f"""
-    WITH RECURSIVE {_JACCARD_EDGES_SQL.strip().removeprefix("WITH")},
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM jac
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM jac
-    ),
-    reach AS (
-        SELECT a AS node, a AS lab FROM edges
-        UNION
-        SELECT e.b AS node, r.lab FROM reach r JOIN edges e ON e.a = r.node
-    )
-    SELECT node AS doc_id,
-           MIN(lab) AS component,
-           MIN(lab) = node AS is_keeper
-    FROM reach GROUP BY node
-    """,
-    tags=("dedup", "text", "iterative"),
-    doc="near_dup_clusters resolved with the alternating "
-    "large-star/small-star algorithm (Kiveris et al. SoCC'14) instead "
-    "of min-label propagation: O(log² n) rounds regardless of graph "
-    "diameter — the variant a 100 TB corpus with pathological duplicate "
-    "chains needs. Same oracle as near_dup_clusters: both algorithms "
-    "must land on identical (node, component-min) labelings.",
-)
-def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textops import ngram_jaccard_pairs
-
-    pairs = ngram_jaccard_pairs(spark, sf_dir)
-    comp = dedup.connected_components(pairs, "doc_a", "doc_b", algorithm="star")
     return comp.select(
         F.col("node").alias("doc_id"),
         "component",

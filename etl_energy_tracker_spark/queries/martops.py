@@ -815,7 +815,7 @@ _LV_CONTRIB = (
     "its brand-partition Q against this sweep's Q measures how much "
     "structure the data actually holds). Scale: scoring is one join "
     "per edge endpoint on the degree table; argmax is a per-node "
-    "window; CC is the label-prop operator (per-round shuffle, "
+    "window; CC is the large-star/small-star operator (per-round shuffle, "
     "lineage-truncated); basket-bounded pair fan-out as in "
     "copurchase_item_similarity. Ref parity: beyond-reference graph "
     "layer.",
@@ -867,20 +867,17 @@ def louvain_one_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(wch))
         .where(F.col("rn") == 1)
         .select("i", "j")
-        # materialize once: the CC rounds re-reference this edge list
-        # and its lineage is the full pair+score+argmax job
+        # materialize here, at the full shuffle width: the lineage is
+        # the pair+score+argmax job, and the CC phase below runs narrow
         .localCheckpoint(eager=True)
     )
-    # choice graphs are argmax chains — diameter grows with chain
-    # length, so label-prop pays diameter rounds; the large/small-star
-    # variant converges in O(log^2 n) rounds regardless. The graph is
-    # tiny (<= one node per part), so the per-round floor is task
-    # overhead: scope the shuffle width down for the CC phase (the
-    # streaming-drive convention).
+    # The choice graph is tiny (<= one node per part), so the
+    # per-round floor is task overhead: scope the shuffle width down
+    # for the CC phase (the streaming-drive convention).
     with shuffle_width(spark, 8):
-        comp = dedup.connected_components(
-            choice, "i", "j", algorithm="star"
-        ).select("node", F.col("component").alias("community_id"))
+        comp = dedup.connected_components(choice, "i", "j").select(
+            "node", F.col("component").alias("community_id")
+        )
         comp = comp.localCheckpoint(eager=True)
     singles = deg.join(
         comp, deg.i == comp.node, "left_anti"

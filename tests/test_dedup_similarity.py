@@ -135,46 +135,43 @@ def test_lsh_topk_recall(spark):
     assert all(p[0] in (0, 1, 2) for p in a)
 
 
-def test_connected_components_known_graph(spark):
+_CC_GRAPH = [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)]
+_CC_LABELS = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
+@pytest.mark.parametrize(
+    "edge_list, want",
+    [
+        (_CC_GRAPH, _CC_LABELS),
+        ([], {}),
+        ([(7, 7)], {7: 7}),
+        (_CC_GRAPH + [(b, a) for a, b in _CC_GRAPH] + _CC_GRAPH, _CC_LABELS),
+    ],
+    ids=["graph", "empty", "self_loop", "dup_reversed"],
+)
+def test_connected_components_known_graph(spark, edge_list, want):
     """Chain 1-2-3, clique 10-11-12, isolated edge 20-21: labels
-    converge to the min node id of each component."""
-    from etl_energy_tracker_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "a long, b long",
-    )
-    got = {r["node"]: r["component"]
-           for r in connected_components(edges, "a", "b").collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    converge to the min node id of each component, one row per node.
+    Degenerate inputs: no edges give no rows, a lone self-loop is its
+    own component, and duplicated or reversed edges change nothing."""
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+    rows = dedup.connected_components(edges, "a", "b").collect()
+    assert len(rows) == len(want)
+    assert {r["node"]: r["component"] for r in rows} == want
 
 
-@pytest.mark.slow
-def test_connected_components_long_chain(spark):
-    """A 12-node path needs multiple propagation rounds — exercises the
-    fixpoint loop, not just one iteration."""
-    from etl_energy_tracker_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 111)], "a long, b long"
-    )
-    got = {r["node"]: r["component"]
-           for r in connected_components(edges, "a", "b").collect()}
-    assert set(got.values()) == {100} and len(got) == 12
-
-
-def test_connected_components_round_bound_raises(spark):
-    """A 30-node path needs more label-propagation rounds than the
-    20-round bound: label-prop raises instead of returning partial
-    labels, and star converges on the same edges."""
-    from etl_energy_tracker_spark.operators.dedup import connected_components
-
+def test_connected_components_round_bound_raises(spark, monkeypatch):
+    """A 30-node path is longer than the 20-round bound: large-star/
+    small-star labels it in O(log² n) rounds, not one per hop. A loop
+    that reaches the bound without a fixpoint raises instead of
+    returning partial labels."""
     edges = spark.createDataFrame([(i, i + 1) for i in range(29)], "a long, b long")
-    with pytest.raises(RuntimeError, match=r"label-prop.*20 rounds"):
-        connected_components(edges, "a", "b").collect()
     got = {r["node"]: r["component"]
-           for r in connected_components(edges, "a", "b", algorithm="star").collect()}
+           for r in dedup.connected_components(edges, "a", "b").collect()}
     assert set(got.values()) == {0} and len(got) == 30
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint in 1 rounds"):
+        dedup.connected_components(edges, "a", "b")
 
 
 @pytest.mark.slow

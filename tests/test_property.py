@@ -235,7 +235,7 @@ def test_simhash_nul_tokens_in_one_batch(spark):
     assert got == {i: scalar_simhash(s) for i, s in enumerate(texts)}
 
 
-# --------------------------------------- connected components: star vs label-prop
+# ------------------------------------- connected components vs union-find
 
 _cc_edges = st.lists(
     st.tuples(st.integers(0, 15), st.integers(0, 15)),
@@ -247,28 +247,21 @@ _cc_edges = st.lists(
 @settings(max_examples=6, deadline=None)
 @given(_cc_edges)
 @pytest.mark.slow
-def test_cc_star_matches_label_prop(spark, edge_list):
-    """The alternating large-star/small-star algorithm must produce the
-    SAME (node, component-min) labeling as min-label propagation on
-    arbitrary graphs — including self-loops, duplicates, chains, and
-    disconnected singleton-free unions. A python union-find is the
-    independent third opinion."""
+def test_cc_matches_union_find(spark, edge_list):
+    """connected_components must produce the (node, component-min)
+    labeling of a python union-find on arbitrary graphs, including
+    self-loops, duplicates, chains and disconnected unions."""
     from etl_energy_tracker_spark.operators.dedup import connected_components
 
-    # always include a long chain (the case star exists for) and a
-    # self-loop alongside the generated edges
-    edge_list = edge_list + [(20 + i, 21 + i) for i in range(6)] + [(30, 30)]
+    # always include a 40-edge chain, longer than the 20-round bound,
+    # and a self-loop-only node outside it
+    edge_list = edge_list + [(20 + i, 21 + i) for i in range(40)] + [(100, 100)]
     edges = spark.createDataFrame(edge_list, "a long, b long")
 
-    lp = {
+    got = {
         r["node"]: r["component"]
         for r in connected_components(edges, "a", "b").collect()
     }
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, "a", "b", algorithm="star").collect()
-    }
-    assert star == lp
 
     # union-find ground truth
     parent: dict[int, int] = {}
@@ -287,7 +280,7 @@ def test_cc_star_matches_label_prop(spark, edge_list):
     expected = {n: find(n) for n in parent}
     # find() path-halving leaves non-root parents; normalize to roots
     expected = {n: find(n) for n in expected}
-    assert lp == expected
+    assert got == expected
 
 
 # --------------------------------------------------- stdlib PNG codec round-trip

@@ -3,7 +3,7 @@
 VERDICT r4 task 5: the 100 TB story for five operators rests on
 asymptotic claims (triangle_count's degree-ordered wedge bound,
 ngram_jaccard_pairs' df-cap, incremental_minhash_dedup's
-batch-x-index join, near_dup_clusters_star's O(log^2 n) rounds,
+batch-x-index join, near_dup_clusters' O(log^2 n) rounds,
 semdedup_prune's cluster-bounded pairs). This probe builds a
 10x-scaled copy of the tables they read (sf0.1 -> sf1-equivalent) and
 times each operator at both scales; ~linear growth in input confirms
@@ -76,7 +76,7 @@ OPS = [
     "triangle_count",
     "ngram_jaccard_pairs",
     "incremental_minhash_dedup",
-    "near_dup_clusters_star",
+    "near_dup_clusters",
     "semdedup_prune",
     # round-5 additions with pair-forming or ranking stages
     "jaccard_knn_topk",
@@ -278,7 +278,6 @@ NDV_OPS = [
     "entity_resolution_golden",
     "prefix_filter_jaccard_join",
     "near_dup_clusters",
-    "near_dup_clusters_star",
 ]
 
 # Per-user experimentation kernels probed on the NDV(users) axis
